@@ -9,6 +9,7 @@ These are the engine-level building blocks every operator composes:
                          ``"1h30m"``, ``"5w"``) → microseconds
                          (reference documents the grammar at
                          polars_trading/bars.py:101-108).
+* ``duration_micros``  — the same for ``str | timedelta`` offsets.
 * ``truncate``         — epoch-aligned bucketing of a timestamp by an
                          arbitrary duration (role of Polars
                          ``dt.truncate``); weeks anchor to Monday.
@@ -27,7 +28,8 @@ whole bundle participates in whole-stage codegen — no Python UDFs.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Sequence
+from datetime import timedelta
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "col_or_lit",
     "parse_duration",
+    "duration_micros",
     "duration_to_interval",
     "truncate",
     "with_seq",
@@ -44,7 +47,6 @@ __all__ = [
     "release_persisted",
     "declare_unique_timestamps",
     "has_unique_timestamps",
-    "resolve_order_mode",
     "SEQ_COL",
 ]
 
@@ -106,6 +108,13 @@ def parse_duration(duration: str) -> tuple[int, bool]:
     if micros <= 0:
         raise ValueError(f"duration must be positive: {duration!r}")
     return micros, all(u == "w" for u in units)
+
+
+def duration_micros(duration: str | timedelta) -> int:
+    """A duration string or ``timedelta`` in whole microseconds."""
+    if isinstance(duration, timedelta):
+        return int(duration.total_seconds() * 1_000_000)
+    return parse_duration(duration)[0]
 
 
 def duration_to_interval(duration: str) -> str:
@@ -222,11 +231,10 @@ def declare_unique_timestamps(df: DataFrame, ts_col: str) -> DataFrame:
     date]) group of this source.
 
     The declaration rides on column metadata, surviving projections, and
-    lets the bar operators auto-select the scalar order key
+    is the only thing that selects the bar operators' scalar order key
     (HashAggregate — measured 3× over the struct key's SortAggregate at
-    4M rows) without the caller threading ``order_mode`` manually.  Only
-    declare what the source really guarantees: with duplicate
-    timestamps the fast key breaks ties nondeterministically.
+    4M rows).  Only declare what the source really guarantees: with
+    duplicate timestamps the scalar key breaks ties nondeterministically.
     """
     return df.withMetadata(ts_col, {_UNIQUE_TS_META: True})
 
@@ -240,24 +248,15 @@ def has_unique_timestamps(df: DataFrame, ts_col: str) -> bool:
     return bool(meta.get(_UNIQUE_TS_META, False))
 
 
-def resolve_order_mode(df: DataFrame, ts_col: str, order_mode: str) -> str:
-    """``auto`` → ``fast`` iff the source declared unique timestamps."""
-    if order_mode == "auto":
-        return "fast" if has_unique_timestamps(df, ts_col) else "exact"
-    return order_mode
-
-
-def _order_key(ts: Column, seq: Column | None, mode: str) -> Column:
-    if mode == "fast":
+def _order_key(ts: Column, seq: Column | None, unique_ts: bool) -> Column:
+    if unique_ts:
         # Scalar long order key: min_by/max_by buffers stay mutable
         # primitives, so Catalyst plans HashAggregate instead of the
-        # SortAggregate a struct key forces.  Trade-off: rows sharing a
-        # timestamp tie nondeterministically (the struct key breaks ties
-        # on seq).  The right default at 100 TB group cardinalities when
-        # the source guarantees unique timestamps per group.
+        # SortAggregate a struct key forces.  Only sound when the source
+        # guarantees unique timestamps per group: rows sharing a
+        # timestamp would tie nondeterministically (the struct key
+        # breaks ties on seq).
         return F.unix_micros(ts)
-    if mode != "exact":
-        raise ValueError(f"order_mode must be 'exact' or 'fast', got {mode!r}")
     return F.struct(ts, seq) if seq is not None else F.struct(ts)
 
 
@@ -268,7 +267,7 @@ def ohlcv_aggs(
     *,
     seq: str | None = SEQ_COL,
     ts_name: str | None = None,
-    order_mode: str = "exact",
+    unique_ts: bool = False,
 ) -> list[Column]:
     """The 9-column OHLCV aggregation bundle.
 
@@ -280,12 +279,14 @@ def ohlcv_aggs(
 
     ``size`` may be a column name or a Column (volume bars aggregate the
     per-piece split amount rather than the raw trade size).
+    ``unique_ts`` selects the scalar ``unix_micros`` order key; pass
+    ``has_unique_timestamps`` of the source.
     """
     ts_name = ts_name or ts
     tcol = F.col(ts)
     pcol = F.col(price)
     scol = col_or_lit(size)
-    key = _order_key(tcol, F.col(seq) if seq else None, order_mode)
+    key = _order_key(tcol, F.col(seq) if seq else None, unique_ts)
     return [
         F.min(tcol).alias(f"{ts_name}_start"),
         F.max(tcol).alias(f"{ts_name}_end"),

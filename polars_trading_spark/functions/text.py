@@ -586,10 +586,8 @@ def unigram_logprob(
 
     k = float(smoothing_k)
     ex = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
-    dtc = persist_tracked(
-        ex.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("__cdt")),
-        eager=True,  # model + scoring join are AQE-concurrent (r15 §5.3)
-    )
+    # Lazy persist: building the frame must not run a job.
+    dtc = persist_tracked(ex.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("__cdt")))
     model = dtc.groupBy("tok").agg(F.sum("__cdt").alias("c"))
     # One-row totals, broadcast-crossJoined so no job runs at plan build
     # and the denominator stays inside the lazy plan.

@@ -23,6 +23,21 @@ plus the Rust ``bar_groups`` kernel, src/bars.rs:10-159) Spark-first:
   partition WITHOUT materializing the unit explosion (which would
   multiply row count by share count — a non-starter at 100 TB).
 
+Every bar clock has one shape: ``_bar_input`` prepares the trades
+(null prices dropped, ``SEQ_COL`` tiebreaker, optional date split,
+order key), a clock assigns a bar id per row, and ``ohlcv_aggs``
+reduces each bar natively.  Clocks whose reset-on-breach recursion is
+sequential (range here, imbalance/run in ``imbalance.py``) share
+``_scan_bars``: one slim ``applyInPandas`` island per (symbol[, date])
+runs the clock's numpy scan, then the native aggregate.
+
+The OHLCV order key is a declaration made by the source, not a switch:
+when the source declared per-group-unique timestamps
+(``declare_unique_timestamps``) open/close use a scalar ``unix_micros``
+key and plan as HashAggregate; otherwise they use the ``(ts, seq)``
+struct key, which plans as SortAggregate but breaks timestamp ties
+deterministically.
+
 Scale notes: every operator shuffles exactly once on its natural key
 (symbol[, date] / bucket); pre-partitioning the source Parquet by
 symbol/date makes these map-side. No global sorts anywhere — ordered
@@ -33,7 +48,7 @@ order.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
 
@@ -44,9 +59,9 @@ from pyspark.sql import types as T
 
 from polars_trading_spark._utils import (
     SEQ_COL,
-    ohlcv_aggs,
     bar_output_columns,
-    resolve_order_mode,
+    has_unique_timestamps,
+    ohlcv_aggs,
     truncate,
     with_seq,
 )
@@ -77,57 +92,105 @@ def _final_bar_select(df: DataFrame, symbol: str, ts: str, extra: Sequence[str] 
     return df.select(*[F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c) for c in cols])
 
 
-def time_bars(df: DataFrame, *, bar_size: str = "1m", order_mode: str = "auto") -> DataFrame:
+class _BarInput(NamedTuple):
+    """Trades ready for a bar clock, plus the configured column names."""
+
+    df: DataFrame
+    keys: list[str]  # symbol[, date]: the partition a clock runs in
+    ts: str
+    price: str
+    size: str
+    symbol: str
+    unique_ts: bool  # the source declared per-group-unique timestamps
+
+    def ohlcv(self, size: str | Column | None = None) -> list[Column]:
+        """``ohlcv_aggs`` with the order key the source's declaration picks."""
+        return ohlcv_aggs(
+            self.ts, self.price, self.size if size is None else size, unique_ts=self.unique_ts
+        )
+
+
+def _bar_input(df: DataFrame, split_by_date: bool) -> _BarInput:
+    """The input preparation every bar clock shares: drop null prices,
+    attach the ``SEQ_COL`` tiebreaker, add the date split, and choose
+    the OHLCV order key from the source's ``declare_unique_timestamps``
+    metadata."""
+    ts, price, size, symbol = (
+        column_names.timestamp,
+        column_names.price,
+        column_names.size,
+        column_names.symbol,
+    )
+    keys = [symbol]
+    out = with_seq(df.na.drop(subset=[price]))
+    if split_by_date:
+        out = out.withColumn(_DATE, F.to_date(ts))
+        keys.append(_DATE)
+    return _BarInput(out, keys, ts, price, size, symbol, has_unique_timestamps(df, ts))
+
+
+def _scan_bars(
+    df: DataFrame,
+    split_by_date: bool,
+    assign_ids: Callable[[np.ndarray, np.ndarray], np.ndarray],
+) -> DataFrame:
+    """OHLCV bars whose ids come from a sequential numpy scan.
+
+    ``assign_ids(prices, sizes)`` gets one (symbol[, date]) partition's
+    float64 arrays in ``(ts, seq)`` order (a null size arrives as NaN)
+    and returns a bar id per row.  It runs in a slim ``applyInPandas``
+    island that ships only the key, order, price and size columns; the
+    OHLCV reduction is one native aggregate over (keys, bar_id).
+    """
+    src = _bar_input(df, split_by_date)
+    ts, price, size = src.ts, src.price, src.size
+    slim = src.df.select(*src.keys, ts, SEQ_COL, price, size)
+    schema = slim.withColumn("bar_id", F.lit(0).cast("long")).schema
+
+    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values([ts, SEQ_COL], kind="mergesort").reset_index(drop=True)
+        p = pdf[price].to_numpy(dtype=np.float64)
+        s = pdf[size].to_numpy(dtype=np.float64)
+        pdf["bar_id"] = assign_ids(p, s)
+        return pdf
+
+    assigned = slim.groupBy(*src.keys).applyInPandas(assign, schema=schema)
+    bars = assigned.groupBy(*src.keys, "bar_id").agg(*src.ohlcv())
+    return _final_bar_select(bars, src.symbol, ts)
+
+
+def time_bars(df: DataFrame, *, bar_size: str = "1m") -> DataFrame:
     """OHLCV bars over fixed time buckets (reference: bars.py:91-139).
 
     ``bar_size`` uses Polars duration grammar (``1s/2m/3h/4d/5w``,
     compounds like ``"1h30m"`` allowed). The bucket timestamp keeps the
     configured timestamp column's name, matching the reference's rename.
     """
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
+    src = _bar_input(df, split_by_date=False)
     out = (
-        with_seq(df.na.drop(subset=[price]))
-        .withColumn("__bucket", truncate(ts, bar_size))
-        .groupBy("__bucket", symbol)
-        .agg(*ohlcv_aggs(ts, price, size, order_mode=order_mode))
-        .withColumnRenamed("__bucket", ts)
+        src.df.withColumn("__bucket", truncate(src.ts, bar_size))
+        .groupBy("__bucket", src.symbol)
+        .agg(*src.ohlcv())
+        .withColumnRenamed("__bucket", src.ts)
     )
-    return _final_bar_select(out, symbol, ts, extra=[ts])
+    return _final_bar_select(out, src.symbol, src.ts, extra=[src.ts])
 
 
-def tick_bars(df: DataFrame, *, bar_size: int = 100, split_by_date: bool = True, order_mode: str = "auto") -> DataFrame:
+def tick_bars(df: DataFrame, *, bar_size: int = 100, split_by_date: bool = True) -> DataFrame:
     """OHLCV bars over fixed trade counts (reference: bars.py:142-191).
 
     Bar membership is ``(row_number - 1) // bar_size`` per symbol (and per
     date when ``split_by_date``), with ``(ts, seq)`` as the deterministic
     order key.
     """
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-
-    w = Window.partitionBy(*keys).orderBy(ts, SEQ_COL)
+    src = _bar_input(df, split_by_date)
+    w = Window.partitionBy(*src.keys).orderBy(src.ts, SEQ_COL)
     out = (
-        out.withColumn("__tick_group", F.floor((F.row_number().over(w) - 1) / F.lit(bar_size)))
-        .groupBy("__tick_group", *keys)
-        .agg(*ohlcv_aggs(ts, price, size, order_mode=order_mode))
+        src.df.withColumn("__tick_group", F.floor((F.row_number().over(w) - 1) / F.lit(bar_size)))
+        .groupBy("__tick_group", *src.keys)
+        .agg(*src.ohlcv())
     )
-    return _final_bar_select(out, symbol, ts)
+    return _final_bar_select(out, src.symbol, src.ts)
 
 
 def bar_groups(
@@ -286,7 +349,7 @@ def bar_groups(
     return out.drop(*drop_cols) if drop_cols else out
 
 
-def volume_bars(df: DataFrame, *, bar_size: int = 10_000, split_by_date: bool = True, order_mode: str = "auto") -> DataFrame:
+def volume_bars(df: DataFrame, *, bar_size: int = 10_000, split_by_date: bool = True) -> DataFrame:
     """OHLCV bars over fixed traded volume (reference: bars.py:194-244).
 
     A trade straddling a bar boundary is split across bars (split-mode
@@ -295,24 +358,12 @@ def volume_bars(df: DataFrame, *, bar_size: int = 10_000, split_by_date: bool = 
     is pure window arithmetic — one shuffle for the cumulative-sum window,
     one for the final aggregate, both on (symbol[, date]).
     """
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-
+    src = _bar_input(df, split_by_date)
     pieces = bar_groups(
-        out, size, bar_size, allow_splits=True, partition_by=keys, order_by=[ts, SEQ_COL]
+        src.df, src.size, bar_size, allow_splits=True, partition_by=src.keys, order_by=[src.ts, SEQ_COL]
     )
-    out = pieces.groupBy(*keys, BAR_ID).agg(*ohlcv_aggs(ts, price, F.col(BAR_AMOUNT), order_mode=order_mode))
-    return _final_bar_select(out, symbol, ts)
+    out = pieces.groupBy(*src.keys, BAR_ID).agg(*src.ohlcv(F.col(BAR_AMOUNT)))
+    return _final_bar_select(out, src.symbol, src.ts)
 
 
 def dollar_bars(df: DataFrame, *, bar_size: float = 1_000_000.0, split_by_date: bool = True) -> DataFrame:
@@ -334,17 +385,8 @@ def dollar_bars(df: DataFrame, *, bar_size: float = 1_000_000.0, split_by_date: 
     directly (the per-bar OHLCV reduction happens in the same pass, so
     there is exactly one shuffle total).
     """
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
+    src = _bar_input(df, split_by_date)
+    ts, price, size, symbol = src.ts, src.price, src.size, src.symbol
 
     schema = T.StructType(
         [
@@ -459,7 +501,7 @@ def dollar_bars(df: DataFrame, *, bar_size: float = 1_000_000.0, split_by_date: 
         )
         return bars
 
-    return out.groupBy(*keys).applyInPandas(build, schema=schema)
+    return src.df.groupBy(*src.keys).applyInPandas(build, schema=schema)
 
 
 def _range_scan(
@@ -498,13 +540,7 @@ def _range_scan(
     return ids, None, gid
 
 
-def range_bars(
-    df: DataFrame,
-    range_size: float,
-    *,
-    split_by_date: bool = True,
-    order_mode: str = "auto",
-) -> DataFrame:
+def range_bars(df: DataFrame, range_size: float, *, split_by_date: bool = True) -> DataFrame:
     """Range bars: the price clock.  A bar closes (inclusively) on the
     first trade whose price has moved at least ``range_size`` away from
     the bar's opening price; the next trade opens a new bar.
@@ -516,41 +552,11 @@ def range_bars(
     (the classic constant-range chart, cf. AFML 2.3.1's discussion of
     alternative clocks).
 
-    The reset-on-breach recursion is sequential, so bar ids come from a
-    chunked numpy scan inside a slim ``applyInPandas`` island per
-    (symbol[, date]) — O(n + bars·chunk), same shape and contract as
-    ``imbalance_bars`` — and the OHLCV reduction stays native.
+    The reset-on-breach recursion is sequential, so bar ids come from
+    the chunked ``_range_scan`` in the shared ``_scan_bars`` island —
+    O(n + bars·chunk), same shape as ``imbalance_bars``.
     """
     if range_size <= 0:
         raise ValueError(f"range_size must be positive, got {range_size}")
-
-    from polars_trading_spark.operators.imbalance import _CHUNK
-
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-    slim = out.select(*keys, ts, SEQ_COL, price, size)
-
     delta = float(range_size)
-    schema = slim.withColumn("bar_id", F.lit(0).cast("long")).schema
-
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts, SEQ_COL], kind="mergesort").reset_index(drop=True)
-        p = pdf[price].to_numpy(dtype=np.float64)
-        pdf["bar_id"] = _range_scan(p, delta)[0]
-        return pdf
-
-    assigned = slim.groupBy(*keys).applyInPandas(assign, schema=schema)
-    bars = assigned.groupBy(*keys, "bar_id").agg(
-        *ohlcv_aggs(ts, price, size, order_mode=order_mode)
-    )
-    return _final_bar_select(bars, symbol, ts)
+    return _scan_bars(df, split_by_date, lambda p, s: _range_scan(p, delta)[0])

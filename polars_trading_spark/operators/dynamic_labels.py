@@ -22,13 +22,14 @@ from __future__ import annotations
 from datetime import timedelta
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_trading_spark._utils import SEQ_COL, ensure_parallelism, parse_duration, with_seq
+from polars_trading_spark._utils import SEQ_COL, duration_micros, with_seq
 from polars_trading_spark.config import column_names
 from polars_trading_spark.operators.asof import asof_join
 from polars_trading_spark.operators.ewm import ewm_std
+from polars_trading_spark.operators.sample_weights import _span_join
 
 __all__ = [
     "daily_vol",
@@ -38,21 +39,14 @@ __all__ = [
 ]
 
 
-def _offset_interval(offset: str | timedelta) -> Column:
-    if isinstance(offset, timedelta):
-        micros = int(offset.total_seconds() * 1_000_000)
-    else:
-        micros, _ = parse_duration(offset)
-    return F.expr(f"INTERVAL {micros} MICROSECOND")
-
-
-def daily_vol(df: DataFrame, *, span: int = 100, ewm_method: str = "native") -> DataFrame:
+def daily_vol(df: DataFrame, *, span: int = 100) -> DataFrame:
     """EWM std of ~24h lookback returns (reference dynamic_labels.py:14-86).
 
     For each row, the lookback price is the last trade at-or-before
     ``ts - 24h`` (backward as-of join, per symbol when a symbol column is
     present); the return series' exponentially-weighted std (bias
-    corrected, span-parameterized) is the volatility target.
+    corrected, span-parameterized) is the volatility target, computed
+    natively by ``ewm_std(method="native")``.
 
     Rows without a lookback match (the first 24h per symbol) yield NULL;
     the first matched row yields 0.0 (Polars emits 0.0 for the undefined
@@ -88,7 +82,7 @@ def daily_vol(df: DataFrame, *, span: int = 100, ewm_method: str = "native") -> 
         by=by,
         order_by=[ts, SEQ_COL],
         output_col="__ewm",
-        method=ewm_method,
+        method="native",
     )
     return vol.select(
         ts,
@@ -115,9 +109,8 @@ def get_vertical_barrier_by_timedelta(
     has_symbol = symbol in df.columns
     by = [symbol] if has_symbol else []
 
-    offsets = df.select(
-        *by, ts, *keep_cols, (F.col(ts) + _offset_interval(offset)).alias("__offset")
-    )
+    interval = F.expr(f"INTERVAL {duration_micros(offset)} MICROSECOND")
+    offsets = df.select(*by, ts, *keep_cols, (F.col(ts) + interval).alias("__offset"))
     right = df.select(*by, F.col(ts).alias("vertical_barrier"))
     out = asof_join(
         offsets,
@@ -184,32 +177,7 @@ def apply_profit_taking_stop_loss(
         t1.alias("__t1"),
     )
     path = prices.select(*by, F.col(ts).alias("__pts"), F.col(price).alias("__pp"))
-
-    join_keys = []
-    if bucket is not None:
-        if isinstance(bucket, timedelta):
-            bucket_us = int(bucket.total_seconds() * 1_000_000)
-        else:
-            bucket_us, _ = parse_duration(bucket)
-        ev = ev.withColumn(
-            "__bkt",
-            F.explode(
-                F.sequence(
-                    F.floor(F.unix_micros("__t0") / bucket_us),
-                    F.floor(F.unix_micros("__t1") / bucket_us),
-                )
-            ),
-        )
-        path = path.withColumn("__bkt", F.floor(F.unix_micros("__pts") / bucket_us))
-        join_keys.append("__bkt")
-    join_keys.extend(by)
-    # The join fans each event out to its path rows — make sure the probe
-    # side is spread across the cluster even when it comes from one split.
-    path = ensure_parallelism(path, *join_keys)
-
-    joined = ev.join(path, on=join_keys, how="inner").where(
-        (F.col("__pts") >= F.col("__t0")) & (F.col("__pts") <= F.col("__t1"))
-    )
+    joined = _span_join(ev, path, by, bucket, pt="__pts")
     ret = (F.col("__pp") / F.col("__entry") - 1) * F.col("__side")
     # Keep this aggregate to cheap min(when(...)) forms only: its input
     # is the event×path fan-out (the big relation in the pipeline), so
@@ -243,8 +211,6 @@ def get_triple_barrier_label(
     stop_loss: float = 1.0,
     label_style: str = "three_class",
     side_col: str | None = None,
-    ewm_method: str = "native",
-    materialize_events: bool = True,
 ) -> DataFrame:
     """The flagship end-to-end pipeline (completes the reference stub,
     dynamic_labels.py:173-186): volatility target → vertical barrier →
@@ -276,7 +242,7 @@ def get_triple_barrier_label(
         raise ValueError(f"side_col {side_col!r} not found in trades columns")
 
     trades = with_seq(trades)
-    vol = daily_vol(trades, span=span, ewm_method=ewm_method).withColumnRenamed(
+    vol = daily_vol(trades, span=span).withColumnRenamed(
         "daily_return_volatility", "trgt"
     )
     barrier = get_vertical_barrier_by_timedelta(trades, barrier_offset)
@@ -285,29 +251,24 @@ def get_triple_barrier_label(
         .join(barrier, on=[ts, *by], how="inner")
         .where(F.col("trgt").isNotNull())
     )
-    if materialize_events:
-        # Materialize the event set between pipeline super-stages: its
-        # lineage holds two Python stages and several windows, and the
-        # first-touch join consumes it from a broadcast build — without a
-        # real materialization boundary that subtree gets re-evaluated
-        # with pathological scheduling (measured 30× slower at sf0.1).
-        # This is also what gives AQE true stats to size the range join.
-        # Tracked cache: callers release via release_persisted() once the
-        # labels are consumed (cache-ownership contract in _utils).
-        from polars_trading_spark._utils import persist_tracked
-        from pyspark import StorageLevel
+    # Materialize the event set between pipeline super-stages: its
+    # lineage holds two Python stages and several windows, and the
+    # first-touch join consumes it from a broadcast build — without a
+    # real materialization boundary that subtree gets re-evaluated
+    # with pathological scheduling (measured 30× slower at sf0.1).
+    # This is also what gives AQE true stats to size the range join.
+    # Tracked cache: callers release via release_persisted() once the
+    # labels are consumed (cache-ownership contract in _utils).
+    from polars_trading_spark._utils import persist_tracked
+    from pyspark import StorageLevel
 
-        events = persist_tracked(events, StorageLevel.MEMORY_AND_DISK)
-        events.count()
+    events = persist_tracked(events, StorageLevel.MEMORY_AND_DISK)
+    events.count()
     # Bucket the first-touch join by the barrier horizon (clamped to
     # [1h, 1d]): horizon-sized buckets join only path rows the range
     # filter can actually keep, and the 1h floor bounds the explode
     # count for events whose barrier lands after a session gap.
-    if isinstance(barrier_offset, timedelta):
-        offset_us = int(barrier_offset.total_seconds() * 1_000_000)
-    else:
-        offset_us, _ = parse_duration(barrier_offset)
-    bucket_us = min(max(offset_us, 3_600_000_000), 86_400_000_000)
+    bucket_us = min(max(duration_micros(barrier_offset), 3_600_000_000), 86_400_000_000)
     touched = apply_profit_taking_stop_loss(
         events,
         trades,

@@ -14,18 +14,21 @@ EWMA-adaptive variant is a different operator contract: its threshold
 depends on previously emitted bars, making results initialization-
 sensitive; static-h is the form with a clean differential oracle).
 
-Scale design mirrors ``dollar_bars``/``cusum_filter`` (bars.py:316,
-sampling.py:85): the reset-on-breach recursion is irreducibly
-sequential, so it runs as a slim ``applyInPandas`` island per
-(symbol, date) that only assigns ``bar_id`` per row — inside, the scan
-is chunked-closed-form (cumulative sums + first-crossing argmax,
-O(n + bars * chunk) numpy, no per-row Python). The OHLCV reduction
-stays NATIVE: one hash aggregate over (symbol, date, bar_id) with the
-shared ``min_by/max_by`` bundle, so the whole operator is one shuffle +
-one Arrow round trip of five slim columns. Day boundaries bound island
-memory and give the 100 TB partitioning axis; sign state intentionally
-resets daily (documented contract, same as the reference's
-``split_by_date`` bars).
+Scale design mirrors ``range_bars``/``cusum_filter``: the
+reset-on-breach recursion is irreducibly sequential, so every clock
+here is argument checks plus one ``_scan_bars`` call (operators/bars.py)
+— a slim ``applyInPandas`` island per (symbol, date) that only assigns
+``bar_id`` per row — inside, the scan is chunked-closed-form
+(cumulative sums + first-crossing argmax, O(n + bars * chunk) numpy, no
+per-row Python). The OHLCV reduction stays NATIVE: one hash aggregate
+over (symbol, date, bar_id) with the shared ``min_by/max_by`` bundle,
+whose order key follows the source's ``declare_unique_timestamps``
+declaration, so the whole operator is one shuffle + one Arrow round
+trip of five slim columns. Day boundaries bound island memory and give
+the 100 TB partitioning axis; sign state intentionally resets daily
+(documented contract, same as the reference's ``split_by_date`` bars).
+A null ``size`` weighs 0 in the volume and dollar flows, as in the
+streaming replay.
 """
 
 from __future__ import annotations
@@ -33,11 +36,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from polars_trading_spark._utils import SEQ_COL, ohlcv_aggs, resolve_order_mode, with_seq
-from polars_trading_spark.config import column_names
-from polars_trading_spark.operators.bars import _DATE, _final_bar_select
+from polars_trading_spark.operators.bars import _scan_bars
 
 __all__ = ["imbalance_bars", "imbalance_bars_adaptive", "run_bars"]
 
@@ -57,6 +57,17 @@ def _tick_signs(prices: np.ndarray) -> np.ndarray:
     last = np.maximum.accumulate(np.where(s != 0.0, idx, 0))
     b[1:] = np.where(last > 0, s[np.maximum(last - 1, 0)], 0.0)
     return b
+
+
+def _signed_flow(prices: np.ndarray, sizes: np.ndarray, mode: str) -> np.ndarray:
+    """Per-row signed flow ``b_t * w_t``: the tick-rule sign weighted by
+    1 (tick), size (volume) or size * price (dollar).  A null size
+    (NaN from Arrow) weighs 0, so it cannot poison the running sums."""
+    b = _tick_signs(prices)
+    if mode == "tick":
+        return b
+    w = b * np.where(np.isnan(sizes), 0.0, sizes)
+    return w if mode == "volume" else w * prices
 
 
 def _imbalance_scan(
@@ -99,7 +110,6 @@ def imbalance_bars(
     threshold: float,
     mode: str = "tick",
     split_by_date: bool = True,
-    order_mode: str = "auto",
 ) -> DataFrame:
     """OHLCV bars clocked by tick-rule order-flow imbalance.
 
@@ -111,43 +121,10 @@ def imbalance_bars(
         raise ValueError(f"mode must be one of {_MODES}, got {mode!r}")
     if threshold <= 0:
         raise ValueError(f"threshold must be positive, got {threshold}")
-
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-    slim = out.select(*keys, ts, SEQ_COL, price, size)
-
     h = float(threshold)
-    bar_mode = mode
-    schema = slim.withColumn("bar_id", F.lit(0).cast("long")).schema
-
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts, SEQ_COL], kind="mergesort").reset_index(drop=True)
-        p = pdf[price].to_numpy(dtype=np.float64)
-        b = _tick_signs(p)
-        if bar_mode == "tick":
-            w = b
-        elif bar_mode == "volume":
-            w = b * pdf[size].to_numpy(dtype=np.float64)
-        else:
-            w = b * pdf[size].to_numpy(dtype=np.float64) * p
-        pdf["bar_id"] = _imbalance_scan(w, h)[0]
-        return pdf
-
-    assigned = slim.groupBy(*keys).applyInPandas(assign, schema=schema)
-    bars = assigned.groupBy(*keys, "bar_id").agg(
-        *ohlcv_aggs(ts, price, size, order_mode=order_mode)
+    return _scan_bars(
+        df, split_by_date, lambda p, s: _imbalance_scan(_signed_flow(p, s, mode), h)[0]
     )
-    return _final_bar_select(bars, symbol, ts)
 
 
 def _run_scan(
@@ -192,7 +169,6 @@ def run_bars(
     threshold: float,
     mode: str = "tick",
     split_by_date: bool = True,
-    order_mode: str = "auto",
 ) -> DataFrame:
     """OHLCV bars clocked by one-sided order-flow runs (AFML 2.3.2.2).
 
@@ -206,43 +182,8 @@ def run_bars(
         raise ValueError(f"mode must be one of {_MODES}, got {mode!r}")
     if threshold <= 0:
         raise ValueError(f"threshold must be positive, got {threshold}")
-
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-    slim = out.select(*keys, ts, SEQ_COL, price, size)
-
     h = float(threshold)
-    bar_mode = mode
-    schema = slim.withColumn("bar_id", F.lit(0).cast("long")).schema
-
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts, SEQ_COL], kind="mergesort").reset_index(drop=True)
-        p = pdf[price].to_numpy(dtype=np.float64)
-        b = _tick_signs(p)
-        if bar_mode == "tick":
-            w = b
-        elif bar_mode == "volume":
-            w = b * pdf[size].to_numpy(dtype=np.float64)
-        else:
-            w = b * pdf[size].to_numpy(dtype=np.float64) * p
-        pdf["bar_id"] = _run_scan(w, h)[0]
-        return pdf
-
-    assigned = slim.groupBy(*keys).applyInPandas(assign, schema=schema)
-    bars = assigned.groupBy(*keys, "bar_id").agg(
-        *ohlcv_aggs(ts, price, size, order_mode=order_mode)
-    )
-    return _final_bar_select(bars, symbol, ts)
+    return _scan_bars(df, split_by_date, lambda p, s: _run_scan(_signed_flow(p, s, mode), h)[0])
 
 
 def _adaptive_scan(
@@ -293,7 +234,6 @@ def imbalance_bars_adaptive(
     alpha_flow: float = 0.05,
     mode: str = "tick",
     split_by_date: bool = True,
-    order_mode: str = "auto",
 ) -> DataFrame:
     """EWMA-adaptive imbalance bars — the full AFML 2.3.2.1 form.
 
@@ -319,40 +259,11 @@ def imbalance_bars_adaptive(
         if not (0.0 < a <= 1.0):
             raise ValueError(f"{name} must be in (0, 1], got {a}")
 
-    ts, price, size, symbol = (
-        column_names.timestamp,
-        column_names.price,
-        column_names.size,
-        column_names.symbol,
-    )
-    order_mode = resolve_order_mode(df, ts, order_mode)
-    keys = [symbol]
-    out = with_seq(df.na.drop(subset=[price]))
-    if split_by_date:
-        out = out.withColumn(_DATE, F.to_date(ts))
-        keys.append(_DATE)
-    slim = out.select(*keys, ts, SEQ_COL, price, size)
-
     t0, a_t, a_w = int(init_expected_ticks), float(alpha_ticks), float(alpha_flow)
-    bar_mode = mode
-    schema = slim.withColumn("bar_id", F.lit(0).cast("long")).schema
 
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts, SEQ_COL], kind="mergesort").reset_index(drop=True)
-        p = pdf[price].to_numpy(dtype=np.float64)
-        b = _tick_signs(p)
-        if bar_mode == "tick":
-            w = b
-        elif bar_mode == "volume":
-            w = b * pdf[size].to_numpy(dtype=np.float64)
-        else:
-            w = b * pdf[size].to_numpy(dtype=np.float64) * p
+    def assign_ids(p: np.ndarray, s: np.ndarray) -> np.ndarray:
+        w = _signed_flow(p, s, mode)
         ew = pd.Series(w).ewm(alpha=a_w, adjust=False).mean().to_numpy()
-        pdf["bar_id"] = _adaptive_scan(w, ew, t0, a_t)
-        return pdf
+        return _adaptive_scan(w, ew, t0, a_t)
 
-    assigned = slim.groupBy(*keys).applyInPandas(assign, schema=schema)
-    bars = assigned.groupBy(*keys, "bar_id").agg(
-        *ohlcv_aggs(ts, price, size, order_mode=order_mode)
-    )
-    return _final_bar_select(bars, symbol, ts)
+    return _scan_bars(df, split_by_date, assign_ids)

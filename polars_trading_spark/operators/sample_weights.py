@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 
 from polars_trading_spark._utils import (
     SEQ_COL,
+    duration_micros,
     ensure_parallelism,
     has_unique_timestamps,
-    parse_duration,
 )
 from polars_trading_spark.config import column_names
 
@@ -52,29 +52,26 @@ __all__ = [
 ]
 
 
-def _bucket_micros(bucket: str | timedelta) -> int:
-    if isinstance(bucket, timedelta):
-        return int(bucket.total_seconds() * 1_000_000)
-    micros, _ = parse_duration(bucket)
-    return micros
-
-
 def _span_join(
     events: DataFrame,
     path: DataFrame,
     by: list[str],
     bucket: str | timedelta | None,
+    *,
+    pt: str = "__pt",
 ) -> DataFrame:
-    """events × path rows with path.__pt in [t0, t1], horizon-bucketed.
+    """events × path rows with ``path[pt]`` in [t0, t1], horizon-bucketed.
 
-    ``events`` carries (by…, __t0, __t1); ``path`` carries (by…, __pt,
+    ``events`` carries (by…, __t0, __t1); ``path`` carries (by…, ``pt``,
     extra value columns).  The bucket explode bounds each event's join
-    fan-out to its own horizon — the same scale contract as
-    ``apply_profit_taking_stop_loss`` (operators/dynamic_labels.py).
+    fan-out to its own horizon, so the join never degenerates to a
+    per-symbol cross product; ``None`` = plain range join.  Shared by
+    the sample weights here and the pt/sl first-touch scan
+    (``apply_profit_taking_stop_loss``).
     """
     join_keys: list[str] = []
     if bucket is not None:
-        bucket_us = _bucket_micros(bucket)
+        bucket_us = duration_micros(bucket)
         events = events.withColumn(
             "__bkt",
             F.explode(
@@ -84,12 +81,14 @@ def _span_join(
                 )
             ),
         )
-        path = path.withColumn("__bkt", F.floor(F.unix_micros("__pt") / bucket_us))
+        path = path.withColumn("__bkt", F.floor(F.unix_micros(pt) / bucket_us))
         join_keys.append("__bkt")
     join_keys.extend(by)
+    # The join fans each event out to its path rows — make sure the probe
+    # side is spread across the cluster even when it comes from one split.
     path = ensure_parallelism(path, *join_keys)
     return events.join(path, on=join_keys, how="inner").where(
-        (F.col("__pt") >= F.col("__t0")) & (F.col("__pt") <= F.col("__t1"))
+        (F.col(pt) >= F.col("__t0")) & (F.col(pt) <= F.col("__t1"))
     )
 
 

@@ -150,9 +150,9 @@ def trades_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The driver testdata carries unique (symbol, ts) pairs at every scale
     factor (verified across sf0.001/0.01/0.1), so this reader declares
-    per-group-unique timestamps — bar operators then auto-select the
-    scalar HashAggregate order key (``order_mode='auto'`` → ``'fast'``)
-    instead of the struct-key SortAggregate, with identical results.
+    per-group-unique timestamps — bar operators then use the scalar
+    HashAggregate order key instead of the struct-key SortAggregate,
+    with identical results.
     """
     try:
         key = (spark.sparkContext.applicationId, sf_dir)

@@ -48,19 +48,6 @@ def test_daily_vol_weekend_returns_golden(spark, ten_rows):
     assert got[TS10[9]] == pytest.approx(1.792192, abs=1e-6)
 
 
-def test_daily_vol_native_matches_pandas(spark, ten_rows):
-    with Config(timestamp_column="ts_event"):
-        a = daily_vol(ten_rows, span=3, ewm_method="pandas").collect()
-        b = daily_vol(ten_rows, span=3, ewm_method="native").collect()
-    ga = {r["ts_event"]: r["daily_return_volatility"] for r in a}
-    gb = {r["ts_event"]: r["daily_return_volatility"] for r in b}
-    for t in TS10:
-        if ga[t] is None:
-            assert gb[t] is None
-        else:
-            assert gb[t] == pytest.approx(ga[t], rel=1e-9)
-
-
 @pytest.mark.parametrize(
     "offset,expected_tail",
     [

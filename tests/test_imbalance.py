@@ -75,8 +75,21 @@ def trades_pdf():
     return pd.DataFrame(rows)
 
 
-@pytest.mark.parametrize("mode,h", [("tick", 5.0), ("volume", 20_000.0), ("dollar", 800_000.0)])
-def test_bars_match_pandas_golden(spark, trades_pdf, mode, h):
+@pytest.mark.parametrize(
+    "mode,h,null_sizes",
+    [
+        pytest.param("tick", 5.0, False, id="tick-5.0"),
+        pytest.param("volume", 20_000.0, False, id="volume-20000.0"),
+        pytest.param("dollar", 800_000.0, False, id="dollar-800000.0"),
+        # a null size weighs 0 in the flow; it must not stall the clock
+        pytest.param("volume", 20_000.0, True, id="volume-20000.0-null_size"),
+        pytest.param("dollar", 800_000.0, True, id="dollar-800000.0-null_size"),
+    ],
+)
+def test_bars_match_pandas_golden(spark, trades_pdf, mode, h, null_sizes):
+    if null_sizes:
+        trades_pdf = trades_pdf.astype({"size": "Int64"})
+        trades_pdf.loc[trades_pdf.index % 97 == 5, "size"] = pd.NA
     with Config(timestamp_column="ts_event"):
         out = (
             imbalance_bars(spark.createDataFrame(trades_pdf), threshold=h, mode=mode)
@@ -90,12 +103,13 @@ def test_bars_match_pandas_golden(spark, trades_pdf, mode, h):
     ):
         grp = grp.sort_values("ts_event").reset_index(drop=True)
         b = _tick_signs(grp["price"].to_numpy())
+        sizes = grp["size"].fillna(0).to_numpy(dtype=float)
         if mode == "tick":
             w = b
         elif mode == "volume":
-            w = b * grp["size"].to_numpy(dtype=float)
+            w = b * sizes
         else:
-            w = b * grp["size"].to_numpy(dtype=float) * grp["price"].to_numpy()
+            w = b * sizes * grp["price"].to_numpy()
         grp["bar_id"] = _reference_scan(w, h)
         for _, bar in grp.groupby("bar_id"):
             expected_rows.append(

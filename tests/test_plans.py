@@ -11,6 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_trading_spark import Config, time_bars, tick_bars, volume_bars
+from polars_trading_spark.operators.bars import range_bars
+from polars_trading_spark.operators.imbalance import (
+    imbalance_bars,
+    imbalance_bars_adaptive,
+    run_bars,
+)
 from polars_trading_spark.operators.asof import asof_join
 from polars_trading_spark.operators.labels import fixed_time_return
 from polars_trading_spark.plans import (
@@ -91,32 +97,51 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "PushedFilters" in plan and "event_type" in plan.split("PushedFilters")[1][:200]
 
 
+def _undeclared(df):
+    """The same rows with the source's unique-timestamp declaration stripped."""
+    return df.withMetadata("ts_event", {})
+
+
 def test_fast_order_mode_uses_hash_aggregate(trades):
     # The struct order key forces SortAggregate (immutable agg buffer);
-    # the scalar unix_micros key must restore HashAggregate — the shape
-    # that matters at 100 TB group cardinalities.
+    # the scalar unix_micros key a declared source selects must restore
+    # HashAggregate — the shape that matters at 100 TB group
+    # cardinalities.
     with Config(timestamp_column="ts_event"):
-        exact = time_bars(trades, bar_size="15m", order_mode="exact")
-        fast = time_bars(trades, bar_size="15m", order_mode="fast")
+        exact = time_bars(_undeclared(trades), bar_size="15m")
+        fast = time_bars(trades, bar_size="15m")
     assert "SortAggregate" in plan_string(exact)
     assert "HashAggregate" in plan_string(fast)
     assert "SortAggregate" not in plan_string(fast)
 
 
-def test_auto_order_mode_follows_source_declaration(trades, spark):
-    # trades_from_events declares unique (symbol, ts) → the default
-    # 'auto' mode must pick the HashAggregate fast path with no manual
-    # switch; an undeclared source must stay on the exact struct key.
+_AGGREGATE_CLOCKS = {
+    "time_bars": lambda df: time_bars(df, bar_size="15m"),
+    "tick_bars": lambda df: tick_bars(df, bar_size=50),
+    "volume_bars": lambda df: volume_bars(df, bar_size=200_000),
+    "range_bars": lambda df: range_bars(df, 0.5),
+    "imbalance_bars": lambda df: imbalance_bars(df, threshold=6),
+    "run_bars": lambda df: run_bars(df, threshold=6),
+    "imbalance_bars_adaptive": lambda df: imbalance_bars_adaptive(df),
+}
+
+
+@pytest.mark.parametrize("clock", sorted(_AGGREGATE_CLOCKS))
+def test_auto_order_mode_follows_source_declaration(trades, spark, clock):
+    # trades_from_events declares unique (symbol, ts) → every
+    # aggregate-based bar clock must pick the HashAggregate order key
+    # with no manual switch; an undeclared source must stay on the exact
+    # struct key.
     import datetime as dt
 
+    build = _AGGREGATE_CLOCKS[clock]
     with Config(timestamp_column="ts_event"):
-        declared = time_bars(trades, bar_size="15m")
-        undeclared = time_bars(
+        declared = build(trades)
+        undeclared = build(
             spark.createDataFrame(
                 [("A", 1.0, 1, dt.datetime(2021, 1, 1))],
                 "symbol string, price double, size long, ts_event timestamp",
-            ),
-            bar_size="15m",
+            )
         )
     assert "HashAggregate" in plan_string(declared)
     assert "SortAggregate" not in plan_string(declared)
@@ -124,11 +149,11 @@ def test_auto_order_mode_follows_source_declaration(trades, spark):
 
 
 def test_fast_order_mode_same_results_on_unique_ts(trades):
-    # events timestamps are unique per symbol, so both modes must agree.
+    # events timestamps are unique per symbol, so the declared source's
+    # scalar key and the undeclared copy's struct key must agree.
     with Config(timestamp_column="ts_event"):
-        exact = time_bars(trades, bar_size="15m").collect()
-        fast = time_bars(trades, bar_size="15m", order_mode="fast").collect()
-    key = lambda r: (r["symbol"], r["ts_event"])  # noqa: E731
+        exact = time_bars(_undeclared(trades), bar_size="15m").collect()
+        fast = time_bars(trades, bar_size="15m").collect()
     assert sorted(map(tuple, exact)) == sorted(map(tuple, fast))
 
 
