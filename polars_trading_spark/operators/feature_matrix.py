@@ -7,12 +7,13 @@ wide table per (symbol, bar): range-volatility estimators
 (operators/microstructure.py), and a supervised target — the forward
 next-bar log return and its sign.
 
-Shape: the feature operators are window pipelines over the SAME
-(symbol, ts) ordering, so the assembly joins co-partitioned frames on
-their grain keys — with bucketed bar storage (sinks.write_bucketed)
-those joins are Exchange-free; on a cold frame they share one hash
-partitioning.  The label is one more lead() on the shared ordering.
-No Python anywhere.
+Shape: one pipeline over one ``Window.partitionBy(symbol).orderBy(ts)``.
+The volatility and microstructure helpers append their columns to the
+bar frame in turn and the target is one more ``lead()`` on the same
+ordering, so the plan holds one copy of the bar frame (one bar-clock
+island when the bars come from ``dollar_bars``), one ``symbol``
+exchange and no joins.  One output row per input bar with a non-null
+symbol and timestamp.  No Python anywhere.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_trading_spark.operators.microstructure import microstructure_features
-from polars_trading_spark.operators.volatility import bar_volatility
+from polars_trading_spark.operators.microstructure import MICRO_COLS, _with_microstructure
+from polars_trading_spark.operators.volatility import VOL_COLS, _with_volatility
 
 __all__ = ["bar_feature_matrix"]
 
@@ -36,22 +37,23 @@ def bar_feature_matrix(
 ) -> DataFrame:
     """Wide per-bar feature matrix + forward-return target.
 
-    Returns ``symbol, ts, vol_* (5), roll_measure, kyle_lambda, amihud,
-    fwd_return, label``; feature columns are null until their rolling
-    windows fill, ``fwd_return``/``label`` are null on each symbol's
-    last bar.
+    Returns ``symbol, ts, vol_* (5), roll_measure, kyle_lambda,
+    hasbrouck_lambda, amihud, fwd_return, label``; feature columns are
+    null until their rolling windows fill, ``fwd_return``/``label`` are
+    null on each symbol's last bar.  Every feature equals the standalone
+    ``bar_volatility``/``microstructure_features`` value for that bar.
     """
-    vol = bar_volatility(bars, window=window, symbol_col=symbol_col, ts_col=ts_col,
-                         close_col=close_col)
-    micro = microstructure_features(bars, window=window, symbol_col=symbol_col,
-                                    ts_col=ts_col, close_col=close_col)
+    common = dict(window=window, symbol_col=symbol_col, ts_col=ts_col, close_col=close_col)
+    df = _with_microstructure(_with_volatility(bars, **common), **common)
     order = Window.partitionBy(symbol_col).orderBy(ts_col)
     c = F.col(close_col)
-    target = bars.select(
+    out = df.select(
         symbol_col,
         ts_col,
+        *VOL_COLS,
+        *MICRO_COLS,
         F.log(F.lead(c).over(order) / c).alias("fwd_return"),
     ).withColumn("label", F.signum("fwd_return") + F.lit(0.0))
-
-    keys = [symbol_col, ts_col]
-    return vol.join(micro, on=keys).join(target, on=keys)
+    # Rows without a symbol or timestamp are dropped after the windows,
+    # so every kept row's features equal the standalone operators'.
+    return out.where(F.col(symbol_col).isNotNull() & F.col(ts_col).isNotNull())

@@ -22,6 +22,9 @@ is the closed form ``(n*Sxy - Sx*Sy) / (n*Sxx - Sx^2)`` so it needs no
 regression primitive and behaves identically across engines.  The tick
 rule's carry-forward is ``last(sign, ignorenulls)`` over the unbounded
 preceding frame — O(n) per partition, native.
+``_with_microstructure`` appends the four columns to a bar frame;
+``microstructure_features`` and ``bar_feature_matrix``
+(operators/feature_matrix.py) share it.
 """
 
 from __future__ import annotations
@@ -37,23 +40,25 @@ from polars_trading_spark.config import column_names
 __all__ = ["corwin_schultz", "microstructure_features", "vpin", "sign_autocorr"]
 
 
-def microstructure_features(
+MICRO_COLS = ("roll_measure", "kyle_lambda", "hasbrouck_lambda", "amihud")
+_MICRO_SCRATCH = (
+    "__dp", "__dp_prev", "__tick", "__ret", "__dollar_vol",
+    "__cx", "__cy", "__sv", "__ly", "__hx", "__hy", "__ami",
+)
+
+
+def _with_microstructure(
     bars: DataFrame,
     *,
-    window: int = 20,
-    symbol_col: str = "symbol",
-    ts_col: str = "ts_event_start",
+    window: int,
+    symbol_col: str,
+    ts_col: str,
     close_col: str = "close",
     volume_col: str = "volume",
     vwap_col: str = "vwap",
 ) -> DataFrame:
-    """Rolling Roll measure, Kyle's lambda, Hasbrouck's lambda and Amihud
-    illiquidity per symbol over a bar frame.
-
-    Returns the input keys plus ``roll_measure``, ``kyle_lambda``,
-    ``hasbrouck_lambda``, ``amihud`` (null until the rolling window is
-    full).
-    """
+    """``bars`` with the four ``MICRO_COLS`` appended, computed over the
+    ``Window.partitionBy(symbol_col).orderBy(ts_col)`` ordering."""
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
 
@@ -132,15 +137,37 @@ def microstructure_features(
         .withColumn("kyle_lambda", kyle_lambda)
         .withColumn("hasbrouck_lambda", hasbrouck_lambda)
         .withColumn("amihud", amihud)
-        .select(
-            symbol_col,
-            ts_col,
-            "roll_measure",
-            "kyle_lambda",
-            "hasbrouck_lambda",
-            "amihud",
-        )
+        .drop(*_MICRO_SCRATCH)
     )
+
+
+def microstructure_features(
+    bars: DataFrame,
+    *,
+    window: int = 20,
+    symbol_col: str = "symbol",
+    ts_col: str = "ts_event_start",
+    close_col: str = "close",
+    volume_col: str = "volume",
+    vwap_col: str = "vwap",
+) -> DataFrame:
+    """Rolling Roll measure, Kyle's lambda, Hasbrouck's lambda and Amihud
+    illiquidity per symbol over a bar frame.
+
+    Returns the input keys plus ``roll_measure``, ``kyle_lambda``,
+    ``hasbrouck_lambda``, ``amihud`` (null until the rolling window is
+    full).
+    """
+    out = _with_microstructure(
+        bars,
+        window=window,
+        symbol_col=symbol_col,
+        ts_col=ts_col,
+        close_col=close_col,
+        volume_col=volume_col,
+        vwap_col=vwap_col,
+    )
+    return out.select(symbol_col, ts_col, *MICRO_COLS)
 
 
 def vpin(

@@ -14,6 +14,8 @@ Scale notes: the only exchange is the hash partition on ``symbol`` for
 the window sort; every estimator shares that one window, and adding an
 estimator adds columns, not stages.  On a bucketed bar table
 (``sinks.write_bucketed``) even that exchange disappears.
+``_with_volatility`` appends the columns to a bar frame; ``bar_volatility``
+and ``bar_feature_matrix`` (operators/feature_matrix.py) share it.
 
 Semantics:
 * rolling window of ``window`` bars per symbol (rows, not time),
@@ -40,23 +42,23 @@ def _full_window_only(expr: Column, cnt: Column, window: int) -> Column:
     return F.when(cnt == window, expr)
 
 
-def bar_volatility(
+VOL_COLS = ("vol_cc", "vol_parkinson", "vol_gk", "vol_rs", "vol_yz")
+_VOL_SCRATCH = ("__r_cc", "__r_on", "__r_co", "__hl2", "__rs")
+
+
+def _with_volatility(
     bars: DataFrame,
     *,
-    window: int = 20,
-    symbol_col: str = "symbol",
-    ts_col: str = "ts_event_start",
+    window: int,
+    symbol_col: str,
+    ts_col: str,
     open_col: str = "open",
     high_col: str = "high",
     low_col: str = "low",
     close_col: str = "close",
 ) -> DataFrame:
-    """Rolling close-close / Parkinson / Garman-Klass / Rogers-Satchell /
-    Yang-Zhang volatility per symbol over a bar frame.
-
-    Returns the input keys plus ``vol_cc``, ``vol_parkinson``, ``vol_gk``,
-    ``vol_rs``, ``vol_yz`` (null until the rolling window is full).
-    """
+    """``bars`` with the five ``VOL_COLS`` appended, computed over the
+    ``Window.partitionBy(symbol_col).orderBy(ts_col)`` ordering."""
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
 
@@ -114,15 +116,37 @@ def bar_volatility(
             "vol_yz", _full_window_only(F.sqrt(F.greatest(yz_var, F.lit(0.0))), n_cc, window)
         )
     )
-    return out.select(
-        symbol_col,
-        ts_col,
-        "vol_cc",
-        "vol_parkinson",
-        "vol_gk",
-        "vol_rs",
-        "vol_yz",
+    return out.drop(*_VOL_SCRATCH)
+
+
+def bar_volatility(
+    bars: DataFrame,
+    *,
+    window: int = 20,
+    symbol_col: str = "symbol",
+    ts_col: str = "ts_event_start",
+    open_col: str = "open",
+    high_col: str = "high",
+    low_col: str = "low",
+    close_col: str = "close",
+) -> DataFrame:
+    """Rolling close-close / Parkinson / Garman-Klass / Rogers-Satchell /
+    Yang-Zhang volatility per symbol over a bar frame.
+
+    Returns the input keys plus ``vol_cc``, ``vol_parkinson``, ``vol_gk``,
+    ``vol_rs``, ``vol_yz`` (null until the rolling window is full).
+    """
+    out = _with_volatility(
+        bars,
+        window=window,
+        symbol_col=symbol_col,
+        ts_col=ts_col,
+        open_col=open_col,
+        high_col=high_col,
+        low_col=low_col,
+        close_col=close_col,
     )
+    return out.select(symbol_col, ts_col, *VOL_COLS)
 
 
 def jump_test(

@@ -1,4 +1,5 @@
-"""Print the physical plan of every bar clock and labeling operator.
+"""Print the physical plan of every bar clock, bar feature and labeling
+operator.
 
 Each operator is built on the events-derived trades table twice: as
 read (the source declares per-group-unique timestamps) and with that
@@ -32,7 +33,10 @@ from polars_trading_spark.operators.dynamic_labels import (  # noqa: E402
     get_triple_barrier_label,
     get_vertical_barrier_by_timedelta,
 )
+from polars_trading_spark.operators.feature_matrix import bar_feature_matrix  # noqa: E402
+from polars_trading_spark.operators.microstructure import microstructure_features  # noqa: E402
 from polars_trading_spark.operators.sample_weights import sample_weights  # noqa: E402
+from polars_trading_spark.operators.volatility import bar_volatility  # noqa: E402
 from polars_trading_spark.plans import plan_string  # noqa: E402
 from polars_trading_spark.session import get_spark  # noqa: E402
 from polars_trading_spark.sources.tables import trades_from_events  # noqa: E402
@@ -57,6 +61,9 @@ OPERATORS = {
     "daily_vol": lambda df: daily_vol(df, span=20),
     "get_triple_barrier_label": lambda df: get_triple_barrier_label(df, span=20, barrier_offset="4h"),
     "sample_weights": _weights,
+    "bar_volatility": lambda df: bar_volatility(bars.time_bars(df, bar_size="15m")),
+    "microstructure_features": lambda df: microstructure_features(bars.time_bars(df, bar_size="15m")),
+    "bar_feature_matrix[dollar]": lambda df: bar_feature_matrix(bars.dollar_bars(df, bar_size=1e6)),
 }
 
 

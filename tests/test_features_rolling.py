@@ -286,16 +286,37 @@ def test_feature_matrix_composes(spark, bar_pdf):
         assert pd.isna(grp["fwd_return"].iloc[-1])
         filled = grp.dropna(subset=["fwd_return"])
         assert (np.sign(filled["fwd_return"]) == filled["label"]).all()
-    # features agree with the standalone operators
-    from polars_trading_spark.operators.volatility import bar_volatility
+    # every feature agrees with its standalone operator
+    vol = _spark_result(spark, bar_pdf, bar_volatility)
+    micro = _spark_result(spark, bar_pdf, microstructure_features)
+    for family in (vol, micro):
+        assert (family[["symbol", "ts_event_start"]] == out[["symbol", "ts_event_start"]]).all().all()
+        for c in family.columns.drop(["symbol", "ts_event_start"]):
+            np.testing.assert_allclose(out[c], family[c], rtol=1e-12, equal_nan=True, err_msg=c)
+    assert set(vol.columns) | set(micro.columns) | {"fwd_return", "label"} == set(out.columns)
 
-    vol = (
-        bar_volatility(spark.createDataFrame(bar_pdf), window=WINDOW)
-        .toPandas()
-        .sort_values(["symbol", "ts_event_start"])
-        .reset_index(drop=True)
+
+def test_feature_matrix_one_row_per_bar_on_tied_starts(spark):
+    """A block trade that spans several dollar bars gives them all its
+    timestamp as ``timestamp_start``; the matrix must still emit one row
+    per bar rather than multiply the bars that share a start."""
+    from polars_trading_spark.operators.bars import dollar_bars
+
+    trades = pd.DataFrame(
+        {
+            "symbol": "A",
+            "timestamp": pd.date_range("2024-01-02 09:30", periods=40, freq="s"),
+            "price": [100.0 + 0.01 * i for i in range(40)],
+            "size": [30_000 if i % 10 == 0 else 100 for i in range(40)],
+        }
     )
-    np.testing.assert_allclose(out["vol_cc"], vol["vol_cc"], rtol=1e-12, equal_nan=True)
+    bars = dollar_bars(spark.createDataFrame(trades), bar_size=1e6)
+    starts = bars.toPandas()["timestamp_start"].value_counts()
+    assert len(starts) < starts.sum()  # the tape does tie bar starts
+    out = bar_feature_matrix(bars, window=3, ts_col="timestamp_start").toPandas()
+    pd.testing.assert_series_equal(
+        out["timestamp_start"].value_counts().sort_index(), starts.sort_index()
+    )
 
 
 # ---------------------------------------------------------------------------

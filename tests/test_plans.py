@@ -216,6 +216,21 @@ def test_bar_features_no_python_one_window_partition(trades):
         assert count_exchanges(out) <= base_ex + 1  # one symbol repartition
 
 
+def test_bar_feature_matrix_one_bar_island_no_join(trades):
+    """The feature matrix is one window pipeline over the bars: the
+    dollar-bar island runs once, no join, and at most the one ``symbol``
+    exchange on top of the bar clock's own."""
+    from polars_trading_spark.operators.bars import dollar_bars
+    from polars_trading_spark.operators.feature_matrix import bar_feature_matrix
+
+    with Config(timestamp_column="ts_event"):
+        bars = dollar_bars(trades, bar_size=1e6)
+    out = bar_feature_matrix(bars, window=20)
+    assert count_python_stages(out) == 1
+    assert "Join" not in plan_string(out)
+    assert count_exchanges(out) <= count_exchanges(bars) + 1
+
+
 def test_vpin_stays_native(trades):
     from polars_trading_spark.operators.microstructure import vpin
 
