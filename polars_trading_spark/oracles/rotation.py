@@ -10,165 +10,15 @@ every registration without a CORRECTNESS_r*.json row must sit inside
 the active window's first 50 — the one place a new query could
 otherwise silently miss its driver gate.
 
-History: rounds 1-4 gated the original first 50 registrations; round 5
-gated 50 later ones (48 green, 2 determinism bugs fixed + re-gated
-green in round 6); round 6 (50/50) covered the then-unchecked 26 +
-re-checks + backfill; round 7 (50/50) the 18 round-6 registrations +
-28 stale backfill + 4 re-checks; round 8 (50/50, `_ROUND8_FRONT`) the
-18 round-7 registrations + 32 r5-stale backfill; round 9 (47 green +
-3 `err: no_oracle`, `_ROUND9_FRONT`) the 14 round-8 registrations + 36
-backfill.
+History: rounds 1-12 each gated one window of 50 (never-checked
+registrations first, then the stalest backfill); their lists are in
+the git history of this file and their results in CORRECTNESS_r*.json.
 """
 
 from __future__ import annotations
 
 __all__ = ["ACTIVE_FRONT"]
 
-
-_ROUND8_FRONT = [
-    # -- the 18 round-7 registrations, never driver-checked --
-    "lexical_diversity", "encoding_quality", "heaps_law",
-    "term_burstiness", "rank_ic", "url_domains", "code_detection",
-    "lang_mix", "atr", "bollinger", "macd", "bm25", "stochastic", "obv",
-    "session_vwap", "donchian", "hampel_filter", "robust_moments",
-    # -- 32 backfill: latest driver row is round 5 (stalest cohort) --
-    "ac_schedule", "backtest_stats", "bde_cusum", "bet_sizing",
-    "bigram_logprob", "boilerplate", "bpe_pairs", "cluster_keywords",
-    "corpus_funnel", "cs_zscore", "dedup_containment", "dedup_paragraph",
-    "drawdown_path", "dup_spans", "event_funnel", "feature_matrix",
-    "imbalance_bars_adaptive", "intraday_profile", "jump_test",
-    "lead_lag", "ledoit_wolf", "lz_entropy", "ma_crossover",
-    "mix_corpus", "momentum_rank", "pair_correlation", "pcm_features",
-    "pii_scrub", "psi_drift", "range_bars", "rank_portfolio",
-    "retention",
-]
-
-_ROUND9_FRONT = [
-    # -- the 14 round-8 registrations, never driver-checked --
-    "portfolio_capacity", "hrp_weights", "risk_contributions",
-    "token_budget_curves", "bpe_train_merges", "bpe_token_budget",
-    "multimodal_png_decode", "pcm_band_power", "multimodal_gif_decode",
-    "multimodal_jpeg_decode", "dedup_survivor_budget",
-    "spread_band_backtest", "embedding_drift", "dedup_recall_curve",
-    # -- 36 backfill: latest driver row is round 5, then r6 alpha --
-    "return_acf", "roll_adjust", "rolling_beta", "semdedup",
-    "sequential_bootstrap", "sessionize", "sign_autocorr",
-    "similarity_topk_ivf_pq", "spread_signal", "tfidf_cosine_pairs",
-    "unigram_logprob", "var_cvar", "asof_join_backward",
-    "asof_join_nearest", "bar_groups_split", "char_entropy",
-    "chunk_documents", "cusum_filter", "daily_vol", "decontaminate",
-    "dedup_exact", "dedup_minhash_lsh", "deflated_sharpe",
-    "dollar_bars", "dsir_weights", "event_transitions",
-    "ewm_std_native", "fama_macbeth", "fama_macbeth_nw",
-    "fixed_time_return", "frac_diff", "funnel_latency", "har_rv",
-    "hawkes_intensity", "interval_join_events", "ks_drift",
-]
-
-# Round-10 rotation (ACTIVE), computed from CORRECTNESS_r01-r09
-# latest-round history.  Front = the 14 round-9 registrations (never
-# driver-checked) + the 3 formerly rows-only queries (hrp_weights /
-# bpe_train_merges / bpe_token_budget — they went `err: no_oracle` in
-# round 9's window; round 10 gives them recursive-CTE DuckDB oracles,
-# so they re-enter the window to flip to hash-gated PASS) + round-10
-# registrations + the stalest backfill names to fill 50 (latest driver
-# row r6 alphabetical from multimodal_bmp_metadata, then r7
-# alphabetical).  (Remaining r7-latest names — from csw_explosiveness
-# onward — rotate in round 11, together with any round-11
-# registrations.)
-_ROUND10_FRONT = [
-    # -- the 14 round-9 registrations, never driver-checked --
-    "walk_forward", "walk_forward_rolling", "spread_band_backtest_net",
-    "rank_portfolio_net", "lsh_power_curve", "contamination_report",
-    "benchmark_coverage", "multimodal_jpeg_color_decode",
-    "multimodal_png_palette_decode", "multimodal_gif_interlaced_decode",
-    "multimodal_png_interlaced_decode", "multimodal_jpeg_420_decode",
-    "spread_band_tearsheet", "rank_portfolio_tearsheet",
-    # -- the 3 newly-oracled round-8 queries (r9 rows were no_oracle) --
-    "hrp_weights", "bpe_train_merges", "bpe_token_budget",
-    # -- round-10 registrations --
-    "multimodal_jpeg_422_decode", "bpe_encode", "bpe_pack_sequences",
-    "implementation_shortfall", "execution_tearsheet",
-    "quality_classifier", "multimodal_jpeg_progressive_decode",
-    "market_impact_fit", "pbo_cscv", "tokenizer_fertility",
-    "packing_efficiency", "embedding_quantize", "dedup_incremental",
-    "multimodal_png16_decode", "multimodal_jpeg_cmyk_decode",
-    "multimodal_png_sub8_decode", "perplexity_budget_curves",
-    "dedup_cluster_profile", "rv_signature", "weekday_effect",
-    "ic_decay", "lsh_param_select", "lang_confusion",
-    # -- backfill (fills the window to 50): latest driver row r6, then r7 alpha --
-    "multimodal_bmp_metadata", "multimodal_jpeg_metadata",
-    "ngram_novelty", "pack_sequences", "permutation_entropy",
-    "pmi_cooccurrence", "reading_ease", "rsi", "sadf", "sample_weights",
-]
-
-# Round-11 rotation (ACTIVE), computed from CORRECTNESS_r01-r10
-# latest-round history.  Front = the round-11 registrations (never
-# driver-checked: YCCK, animated-GIF, progressive-YCCK and
-# subsampled-progressive/420 and restart-marker decode, plus the
-# domain_cap governance primitive) +
-# `bpe_encode` (round
-# 10's only red row — its gate output is re-registered as an
-# order-sensitive fold checksum, so it re-enters the window to flip to
-# hash-gated PASS) + the stalest backfill to fill 50: every name whose
-# latest driver row is round 6, then round-7 alphabetical (the
-# remaining r7 names from multimodal_metadata... onward rotate in
-# round 12).
-_ROUND11_FRONT = [
-    # -- round-11 registrations, never driver-checked --
-    "multimodal_jpeg_ycck_decode", "multimodal_gif_animated_decode",
-    "multimodal_jpeg_prog_ycck_decode", "multimodal_jpeg_prog420_decode",
-    "multimodal_jpeg_restart_decode", "domain_cap",
-    "multimodal_jpeg_noninterleaved_decode",
-    # -- round-10's red row, gate shape fixed (token_checksum) --
-    "bpe_encode",
-    # -- backfill: latest driver row r6 --
-    "similarity_topk", "similarity_topk_ivf_kmeans", "tick_bars",
-    "tick_quality", "time_bars", "time_bars_compound_duration",
-    "triple_barrier", "triple_barrier_meta", "universe_summary",
-    "upsample_ffill", "vertical_barrier", "volume_bars", "vwap_slippage",
-    "winnow_dup_pairs", "winnow_fingerprints", "zipf_fit",
-    # -- backfill: latest driver row r7, alphabetical --
-    "ann_recall", "bar_volatility", "centroid_similarity",
-    "cluster_representatives", "cointegration", "corpus_filter",
-    "corpus_split", "corpus_stats", "corwin_schultz", "cpcv_assign",
-    "csw_explosiveness", "dedup_clusters", "dedup_embedding_cosine",
-    "dedup_ngram_jaccard", "dedup_recall", "dedup_simhash",
-    "embedding_cohesion", "event_study_car", "gumbel_topk",
-    "hard_negatives", "hurst", "imbalance_bars", "kalman_hedge",
-    "key_skew", "microstructure", "multimodal_frame_sample",
-]
-
-# Round-12 rotation (ACTIVE), staleness recomputed from
-# CORRECTNESS_r01-r11 (latest-round per query: 24 names last gated r7,
-# 50 r8, 47 r9, 49 r10, 50 r11).  Gate-debt decision (round-11 verdict
-# item 8, recorded in COVERAGE.md): cap new registrations at 5 so 45
-# rows go to backfill — the 5 round-12 registrations (partial-MCU JPEG,
-# progressive-restart JPEG, WebP metadata, VP8L lossless decode, exact
-# substring dedup) + ALL 24 r7-stale names + the 21 alphabetically
-# first r8-stale names.  After this round no query's latest gate is
-# older than r8.
-_ROUND12_FRONT = [
-    # -- round-12 registrations, never driver-checked --
-    "multimodal_jpeg_partialmcu_decode",
-    "multimodal_jpeg_prog_restart_decode",
-    "multimodal_webp_metadata",
-    "multimodal_webp_lossless_decode",
-    "dedup_exact_substring",
-    # -- backfill: every name whose latest driver row is round 7 --
-    "multimodal_metadata", "ou_fit", "pairs_distance", "purged_kfold",
-    "realized_moments", "repetition_profile", "return_entropy",
-    "risk_ratios", "run_bars", "runs_test", "sadf_adf1",
-    "similarity_topk_ivf", "similarity_topk_lsh", "size_quantiles",
-    "stratified_sample", "text_analysis", "tfidf_topk", "trend_scan",
-    "two_scale_rv", "ulcer_index", "variance_ratio", "vocab_divergence",
-    "vocab_topk", "vpin",
-    # -- backfill: latest driver row r8, alphabetical --
-    "ac_schedule", "atr", "backtest_stats", "bde_cusum", "bet_sizing",
-    "bigram_logprob", "bm25", "boilerplate", "bollinger", "bpe_pairs",
-    "cluster_keywords", "code_detection", "corpus_funnel", "cs_zscore",
-    "dedup_containment", "dedup_paragraph", "donchian", "drawdown_path",
-    "dup_spans", "encoding_quality", "event_funnel",
-]
 
 # Round-13 rotation (ACTIVE), staleness recomputed from
 # CORRECTNESS_r01-r12 (latest-round per query: 29 names last gated r8,
