@@ -11,10 +11,14 @@ note that oracle's ``df0 < pt`` line is a transcription bug — profit
 takes trigger on the path return EXCEEDING the target, which is what
 both AFML and our implementation use).
 
-Scale design: the first-touch scan is an equi-join on (symbol, day
-bucket) with the range condition as a post-filter — the day-bucket
-explosion bounds fan-out to the barrier horizon instead of a per-symbol
-cross product, so the join stays shuffle-hash/SMJ at 100 TB.
+Scale design: ``get_triple_barrier_label`` builds its events in one
+pass over the trades — ``_with_daily_vol`` and ``_with_vertical_barrier``
+append the volatility target and the barrier (each an as-of against the
+base trades), with no join back on (ts, symbol) and no Spark job while
+the frame is built.  The first-touch scan is then an equi-join on
+(symbol, horizon bucket) with the range condition as a post-filter — the
+bucket explosion bounds fan-out to the barrier horizon instead of a
+per-symbol cross product, so the join stays shuffle-hash/SMJ at 100 TB.
 """
 
 from __future__ import annotations
@@ -39,6 +43,82 @@ __all__ = [
 ]
 
 
+def _by(df: DataFrame) -> list[str]:
+    return [column_names.symbol] if column_names.symbol in df.columns else []
+
+
+def _with_daily_vol(df: DataFrame, trades: DataFrame, span: int, by: list[str]) -> DataFrame:
+    """Append ``daily_return_volatility`` to ``df`` (which carries
+    ``SEQ_COL``): a backward as-of of ``ts - 24h`` against ``trades``,
+    then the native EWM std of the lookback returns.
+
+    ``trades`` is the base frame, never the growing ``df``: as the
+    right side of the as-of it must not drag the caller's lineage in.
+    """
+    ts, price = column_names.timestamp, column_names.price
+    left = df.withColumn("__lookback", F.col(ts) - F.expr("INTERVAL 24 HOURS"))
+    right = trades.select(*by, ts, F.col(price).alias("__lookback_price"))
+    joined = asof_join(
+        left,
+        right,
+        left_on="__lookback",
+        right_on=ts,
+        by=by or None,
+        strategy="backward",
+    )
+    # Key, order and value columns lead (the standalone operator's
+    # projection), then the rest of ``df``; the as-of's scratch columns
+    # and its matched ``<ts>_right`` key fall away here.
+    returns = joined.select(
+        *by,
+        ts,
+        SEQ_COL,
+        (F.col(price) / F.col("__lookback_price") - 1).alias("return"),
+        *[c for c in df.columns if c not in (*by, ts, SEQ_COL, "return")],
+    )
+    vol = ewm_std(
+        returns,
+        "return",
+        span,
+        by=by,
+        order_by=[ts, SEQ_COL],
+        output_col="__ewm",
+        method="native",
+    )
+    return vol.withColumn(
+        "daily_return_volatility",
+        F.when(F.col("return").isNotNull(), F.coalesce(F.col("__ewm"), F.lit(0.0))),
+    ).drop("return", "__ewm")
+
+
+def _with_vertical_barrier(
+    df: DataFrame, trades: DataFrame, offset: str | timedelta, by: list[str]
+) -> DataFrame:
+    """Append ``vertical_barrier`` to ``df``: the first ``trades``
+    timestamp at-or-after ``ts + offset`` (forward as-of).  ``trades``
+    is the base frame, as in ``_with_daily_vol``."""
+    ts = column_names.timestamp
+    interval = F.expr(f"INTERVAL {duration_micros(offset)} MICROSECOND")
+    # Key columns lead, as in the standalone operator's projection; an
+    # existing ``vertical_barrier`` is replaced, not suffixed.
+    offsets = df.select(
+        *by,
+        ts,
+        *[c for c in df.columns if c not in (*by, ts, "vertical_barrier")],
+        (F.col(ts) + interval).alias("__offset"),
+    )
+    right = trades.select(*by, F.col(ts).alias("vertical_barrier"))
+    out = asof_join(
+        offsets,
+        right,
+        left_on="__offset",
+        right_on="vertical_barrier",
+        by=by or None,
+        strategy="forward",
+    )
+    return out.drop("__offset")
+
+
 def daily_vol(df: DataFrame, *, span: int = 100) -> DataFrame:
     """EWM std of ~24h lookback returns (reference dynamic_labels.py:14-86).
 
@@ -53,42 +133,10 @@ def daily_vol(df: DataFrame, *, span: int = 100) -> DataFrame:
     single-observation std — pinned by the reference golden test
     tests/labels/test_dynamic_labels.py:65-107).
     """
-    ts, price, symbol = column_names.timestamp, column_names.price, column_names.symbol
-    has_symbol = symbol in df.columns
-    by = [symbol] if has_symbol else []
-
+    by = _by(df)
     df = with_seq(df)
-    left = df.withColumn("__lookback", F.col(ts) - F.expr("INTERVAL 24 HOURS"))
-    right = df.select(*by, ts, F.col(price).alias("__lookback_price"))
-    joined = asof_join(
-        left,
-        right,
-        left_on="__lookback",
-        right_on=ts,
-        by=by or None,
-        strategy="backward",
-    )
-    # asof_join surfaces the matched right key under the right_on name with
-    # a suffix (collides with left's ts); we only need the matched price.
-    returns = joined.withColumn("return", F.col(price) / F.col("__lookback_price") - 1)
-    # Slim to the EWM's working set before the pandas island — the Arrow
-    # round trip is per-column, and the volatility needs only the key,
-    # order and value columns.
-    slim = returns.select(*by, ts, SEQ_COL, "return")
-    vol = ewm_std(
-        slim,
-        "return",
-        span,
-        by=by,
-        order_by=[ts, SEQ_COL],
-        output_col="__ewm",
-        method="native",
-    )
-    return vol.select(
-        ts,
-        *by,
-        F.when(F.col("return").isNotNull(), F.coalesce(F.col("__ewm"), F.lit(0.0)))
-        .alias("daily_return_volatility"),
+    return _with_daily_vol(df, df, span, by).select(
+        column_names.timestamp, *by, "daily_return_volatility"
     )
 
 
@@ -105,22 +153,10 @@ def get_vertical_barrier_by_timedelta(
     annotating an already-joined frame costs no extra shuffle (vs
     joining the (ts, barrier) result back on the timestamp).
     """
-    ts, symbol = column_names.timestamp, column_names.symbol
-    has_symbol = symbol in df.columns
-    by = [symbol] if has_symbol else []
-
-    interval = F.expr(f"INTERVAL {duration_micros(offset)} MICROSECOND")
-    offsets = df.select(*by, ts, *keep_cols, (F.col(ts) + interval).alias("__offset"))
-    right = df.select(*by, F.col(ts).alias("vertical_barrier"))
-    out = asof_join(
-        offsets,
-        right,
-        left_on="__offset",
-        right_on="vertical_barrier",
-        by=by or None,
-        strategy="forward",
+    by = _by(df)
+    return _with_vertical_barrier(df, df, offset, by).select(
+        *by, column_names.timestamp, *keep_cols, "vertical_barrier"
     )
-    return out.select(*by, ts, *keep_cols, "vertical_barrier")
 
 
 def apply_profit_taking_stop_loss(
@@ -153,9 +189,8 @@ def apply_profit_taking_stop_loss(
     rows than "1d"), while much narrower buckets explode gap-spanning
     events into many pieces.  ``None`` = plain range join.
     """
-    ts, price, symbol = column_names.timestamp, column_names.price, column_names.symbol
-    has_symbol = symbol in events.columns
-    by = [symbol] if has_symbol else []
+    ts, price = column_names.timestamp, column_names.price
+    by = _by(events)
 
     events = with_seq(events)
     pt = F.lit(float(profit_take)) * F.col(target_col) if profit_take else F.lit(None)
@@ -232,9 +267,8 @@ def get_triple_barrier_label(
     labels then answer "should this bet have been taken": 1 exactly when
     the realized bet return is positive.
     """
-    ts, price, symbol = column_names.timestamp, column_names.price, column_names.symbol
-    has_symbol = symbol in trades.columns
-    by = [symbol] if has_symbol else []
+    ts, price = column_names.timestamp, column_names.price
+    by = _by(trades)
 
     if label_style == "meta" and side_col is None:
         raise ValueError("label_style='meta' requires side_col (the primary model's bet side)")
@@ -242,28 +276,15 @@ def get_triple_barrier_label(
         raise ValueError(f"side_col {side_col!r} not found in trades columns")
 
     trades = with_seq(trades)
-    vol = daily_vol(trades, span=span).withColumnRenamed(
+    # One pipeline over the trades: both as-ofs append their column (each
+    # against the base trades), so there is no join back on (ts, symbol)
+    # and building the frame runs no Spark job.
+    vol = _with_daily_vol(trades, trades, span, by).withColumnRenamed(
         "daily_return_volatility", "trgt"
     )
-    barrier = get_vertical_barrier_by_timedelta(trades, barrier_offset)
-    events = (
-        trades.join(vol, on=[ts, *by], how="inner")
-        .join(barrier, on=[ts, *by], how="inner")
-        .where(F.col("trgt").isNotNull())
+    events = _with_vertical_barrier(
+        vol.where(F.col("trgt").isNotNull()), trades, barrier_offset, by
     )
-    # Materialize the event set between pipeline super-stages: its
-    # lineage holds two Python stages and several windows, and the
-    # first-touch join consumes it from a broadcast build — without a
-    # real materialization boundary that subtree gets re-evaluated
-    # with pathological scheduling (measured 30× slower at sf0.1).
-    # This is also what gives AQE true stats to size the range join.
-    # Tracked cache: callers release via release_persisted() once the
-    # labels are consumed (cache-ownership contract in _utils).
-    from polars_trading_spark._utils import persist_tracked
-    from pyspark import StorageLevel
-
-    events = persist_tracked(events, StorageLevel.MEMORY_AND_DISK)
-    events.count()
     # Bucket the first-touch join by the barrier horizon (clamped to
     # [1h, 1d]): horizon-sized buckets join only path rows the range
     # filter can actually keep, and the 1h floor bounds the explode

@@ -26,6 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "2")
 os.environ.setdefault("PTS_SHUFFLE_PARTITIONS", "4")
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from polars_trading_spark._utils import SEQ_COL  # noqa: E402
 from polars_trading_spark.config import Config  # noqa: E402
 from polars_trading_spark.operators import bars, imbalance  # noqa: E402
 from polars_trading_spark.operators.dynamic_labels import (  # noqa: E402
@@ -40,6 +43,13 @@ from polars_trading_spark.operators.volatility import bar_volatility  # noqa: E4
 from polars_trading_spark.plans import plan_string  # noqa: E402
 from polars_trading_spark.session import get_spark  # noqa: E402
 from polars_trading_spark.sources.tables import trades_from_events  # noqa: E402
+
+
+def _meta(df):
+    sided = df.withColumn("side", F.when(F.col(SEQ_COL) % 2 == 0, 1.0).otherwise(-1.0))
+    return get_triple_barrier_label(
+        sided, span=20, barrier_offset="4h", label_style="meta", side_col="side"
+    )
 
 
 def _weights(df):
@@ -59,7 +69,9 @@ OPERATORS = {
     "run_bars": lambda df: imbalance.run_bars(df, threshold=6),
     "imbalance_bars_adaptive": lambda df: imbalance.imbalance_bars_adaptive(df),
     "daily_vol": lambda df: daily_vol(df, span=20),
+    "vertical_barrier": lambda df: get_vertical_barrier_by_timedelta(df, "4h"),
     "get_triple_barrier_label": lambda df: get_triple_barrier_label(df, span=20, barrier_offset="4h"),
+    "get_triple_barrier_label[meta]": _meta,
     "sample_weights": _weights,
     "bar_volatility": lambda df: bar_volatility(bars.time_bars(df, bar_size="15m")),
     "microstructure_features": lambda df: microstructure_features(bars.time_bars(df, bar_size="15m")),
@@ -79,7 +91,7 @@ def main() -> None:
             for label, src in sources.items():
                 plan = re.sub(r"#\d+|, \[plan_id=\d+\]", "", plan_string(build(src), "physical"))
                 plans[f"{name} {label}"] = plan
-                print(f"{name:26s} {label:10s} {hashlib.sha1(plan.encode()).hexdigest()[:12]}")
+                print(f"{name:32s} {label:10s} {hashlib.sha1(plan.encode()).hexdigest()[:12]}")
     for key, plan in plans.items():
         print(f"\n=== {key}\n{plan}")
     spark.stop()

@@ -1,5 +1,6 @@
 """daily_vol / vertical barrier goldens (ported from the reference's
-tests/labels/test_dynamic_labels.py) plus triple-barrier invariants."""
+tests/labels/test_dynamic_labels.py), triple-barrier invariants, and
+triple-barrier labels against an AFML event loop on tied timestamps."""
 
 from __future__ import annotations
 
@@ -72,6 +73,16 @@ def test_vertical_barrier_timedelta_object(spark, ten_rows):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_vertical_barrier_replaces_existing_barrier(spark, ten_rows):
+    # Re-barriering a frame that already carries ``vertical_barrier``
+    # (e.g. at another horizon) returns the new barrier under that name.
+    with Config(timestamp_column="ts_event"):
+        two = get_vertical_barrier_by_timedelta(ten_rows, "2h", keep_cols=["price"])
+        again = get_vertical_barrier_by_timedelta(two, "3h").collect()
+        fresh = get_vertical_barrier_by_timedelta(ten_rows, "3h").collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, fresh))
+
+
 def test_vertical_barrier_multi_symbol(spark):
     rows = [(t, float(i + 1), s) for s in ("A", "B") for i, t in enumerate(TS10)]
     df = spark.createDataFrame(rows, "ts_event timestamp, price double, symbol string")
@@ -129,3 +140,95 @@ def test_native_ewm_unbounded_length_matches_pandas(spark):
     for t in (1, 100, 3_999, 4_000, 20_000, n - 1):  # spans chunk boundaries
         assert nat[t] == pytest.approx(pan[t], rel=1e-9), t
     assert all(v is None or math.isfinite(v) for v in nat.values())
+
+
+def _tied_tape():
+    """225 trades of one symbol over 150 hourly slots; every even slot
+    holds two trades at the same timestamp.  Tied trades share a price,
+    so the 24h lookback price is the same whichever of them the as-of
+    matches; their volatility targets still differ (successive EWM
+    steps), and their bet sides do."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    base = dt.datetime(2024, 1, 1)
+    price, rows = 100.0, []
+    for slot in range(150):
+        price *= float(np.exp(rng.normal(0.0, 0.01)))
+        for _ in range(2 if slot % 2 == 0 else 1):
+            side = 1.0 if len(rows) % 3 else -1.0
+            rows.append((base + dt.timedelta(hours=slot), price, 10, "A", side))
+    return rows
+
+
+def _afml_triple_barrier(rows, *, span, offset, pt, sl, sided):
+    """AFML pg. 45 event loop on one symbol, rows in tape order: each
+    event (a trade with a defined daily-vol target) scans its own path
+    with its own target, entry price and side."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["ts", "price", "size", "symbol", "side"])
+    ts, px = pdf["ts"].to_numpy(), pdf["price"].to_numpy()
+    lb = np.searchsorted(ts, ts - np.timedelta64(24, "h"), side="right") - 1
+    ret = pd.Series(np.where(lb >= 0, px / px[np.maximum(lb, 0)] - 1, np.nan))
+    valid = ret.notna()
+    trgt = pd.Series(np.nan, index=pdf.index)
+    trgt[valid] = ret[valid].ewm(span=span).std().fillna(0.0)
+    vb = np.searchsorted(ts, ts + np.timedelta64(offset), side="left")
+    last_ts = ts[valid.to_numpy()].max()
+    out = []
+    for i in np.flatnonzero(valid.to_numpy()):
+        t0, entry = ts[i], px[i]
+        side = pdf["side"].iat[i] if sided else 1.0
+        t1 = ts[vb[i]] if vb[i] < len(ts) else last_ts
+        path = (ts >= t0) & (ts <= t1)
+        r = (px[path] / entry - 1) * side
+        hit_pt = ts[path][r > pt * trgt[i]]
+        hit_sl = ts[path][r < -sl * trgt[i]]
+        pt_time = hit_pt.min() if len(hit_pt) else None
+        sl_time = hit_sl.min() if len(hit_sl) else None
+        touch = min(t for t in (pt_time, sl_time, t1) if t is not None)
+        realized = (px[np.flatnonzero(ts == touch)[0]] / entry - 1) * side
+        if sided:
+            label = int(realized > 0)
+        else:
+            label = 1 if pt_time == touch else -1 if sl_time == touch else 0
+        out.append(
+            (
+                pd.Timestamp(t0).to_pydatetime(),
+                pd.Timestamp(touch).to_pydatetime(),
+                round(realized, 9),
+                label,
+            )
+        )
+    return sorted(out)
+
+
+@pytest.mark.parametrize("label_style", ["three_class", "meta"])
+def test_triple_barrier_tied_timestamps_match_afml_loop(spark, label_style):
+    # One event row per trade: tied timestamps must not fan an event out
+    # to its tied neighbours' targets (189 events from 225 trades).
+    rows = _tied_tape()
+    df = spark.createDataFrame(
+        rows, "ts_event timestamp, price double, size long, symbol string, side double"
+    )
+    sided = label_style == "meta"
+    with Config(timestamp_column="ts_event"):
+        out = get_triple_barrier_label(
+            df,
+            span=10,
+            barrier_offset="12h",
+            profit_take=0.5,
+            stop_loss=0.5,
+            label_style=label_style,
+            side_col="side" if sided else None,
+        ).collect()
+    got = sorted(
+        (r["timestamp"], r["touch_timestamp"], round(r["return"], 9), r["label"]) for r in out
+    )
+    want = _afml_triple_barrier(
+        rows, span=10, offset=dt.timedelta(hours=12), pt=0.5, sl=0.5, sided=sided
+    )
+    assert len(want) == 189
+    assert got == want

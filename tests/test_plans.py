@@ -7,6 +7,8 @@ value-level test stays green.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,6 +175,23 @@ def test_sample_weights_zero_python_bounded_exchanges(trades):
     # each a keyed shuffle; anything beyond ~8 means a lost partitioning.
     assert count_exchanges(out) <= 8
     assert not has_unbounded_following_frame(out)
+
+
+def test_triple_barrier_one_pipeline_no_job_at_build(spark, trades):
+    """The daily-vol target and the vertical barrier are appended to the
+    trades in one pipeline: building the labels runs no Spark job, the
+    plan holds no Python stage, and its only joins are the first-touch
+    span join and the touch-price lookup (no join back on (ts, symbol))."""
+    from polars_trading_spark.operators.dynamic_labels import get_triple_barrier_label
+
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    with Config(timestamp_column="ts_event"):
+        out = get_triple_barrier_label(trades, span=20, barrier_offset="4h")
+    after = tracker.getJobIdsForGroup(None)
+    assert len(after) == len(before)
+    assert count_python_stages(out) == 0
+    assert len(re.findall(r"\w+Join\b", plan_string(out))) <= 2
 
 
 def test_vocab_topk_is_distributed_topk_no_python(spark, sf_dir):
