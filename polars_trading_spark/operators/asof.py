@@ -16,6 +16,14 @@ Tie semantics match Polars: matches are inclusive (``right.key <=
 left.key`` for backward, ``>=`` for forward), so at equal keys right
 rows sort before probes for backward and after probes for forward.
 
+Tied right rows (several sharing the matched key in one group) resolve
+by frame order when the right side carries ``SEQ_COL`` (``with_seq``):
+backward takes the LAST tied row, as Polars does, and forward the
+FIRST; ``nearest`` takes whichever of those two candidates is closer,
+the backward one on equal distance.  The right's ``SEQ_COL`` is only
+the tie order, never an output column.  Without it, which tied row a
+probe gets depends on partitioning.
+
 One shuffle on (by, key); at 100 TB this is the same cost profile as a
 sort-merge join on the ``by`` key but without the per-key cross
 product a range join would risk.
@@ -28,11 +36,14 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_trading_spark._utils import SEQ_COL
+
 __all__ = ["asof_join"]
 
 _MARK = "__pts_is_right"
 _KEY = "__pts_asof_key"
 _MATCH_KEY = "__pts_matched_key"
+_TIE = "__pts_asof_tie"
 
 
 def asof_join(
@@ -66,9 +77,13 @@ def asof_join(
         raise ValueError("provide `on` or both `left_on` and `right_on`")
     by_cols = [by] if isinstance(by, str) else list(by or [])
 
-    # Right value columns (everything except join/by keys), suffixed on
-    # collision with a left column — Polars join_asof convention.
-    value_cols = [c for c in right.columns if c != right_key and c not in by_cols]
+    # Right value columns (everything except join/by keys and the tie
+    # order), suffixed on collision with a left column — Polars
+    # join_asof convention.
+    tie = SEQ_COL in right.columns
+    value_cols = [
+        c for c in right.columns if c not in (right_key, SEQ_COL) and c not in by_cols
+    ]
     renames = {c: (c + suffix if c in left.columns else c) for c in value_cols}
 
     right_m = right.select(
@@ -77,6 +92,7 @@ def asof_join(
         F.col(right_key).alias(_MATCH_KEY),
         *[F.col(c).alias(renames[c]) for c in value_cols],
         F.lit(1).alias(_MARK),
+        *([F.col(SEQ_COL).alias(_TIE)] if tie else []),
     )
     left_m = left.select(
         "*",
@@ -87,6 +103,7 @@ def asof_join(
             for c in value_cols
         ],
         F.lit(0).alias(_MARK),
+        *([F.lit(None).cast(right.schema[SEQ_COL].dataType).alias(_TIE)] if tie else []),
     )
     # Align schemas: left_m carries all left columns; right_m gets nulls for them.
     for c in left.columns:
@@ -103,6 +120,13 @@ def asof_join(
     # smallest right key ≥ the probe.  Right rows sort before probes at
     # equal keys in both directions, keeping matches inclusive.
     pick = lambda c: F.last(c, ignorenulls=True)  # noqa: E731
+    # Tied right rows: the backward scan must see the last in frame
+    # order last, the descending forward scan the first.
+    tie_b = [F.col(_TIE).asc()] if tie else []
+    tie_f = [F.col(_TIE).desc()] if tie else []
+    carried = [
+        c for c in unioned.columns if c not in renames.values() and c not in (_MATCH_KEY, _TIE)
+    ]
 
     if strategy == "nearest":
         # Both directional scans over the SAME union and partitioning
@@ -110,18 +134,14 @@ def asof_join(
         # exchange), then the per-row closer candidate wins; ties take
         # the backward match (the at-or-before row).
         part = Window.partitionBy(*(by_cols or [F.lit(1)]))
-        wb = part.orderBy(F.col(_KEY).asc(), F.col(_MARK).desc()).rowsBetween(
+        wb = part.orderBy(F.col(_KEY).asc(), F.col(_MARK).desc(), *tie_b).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
-        wf = part.orderBy(F.col(_KEY).desc(), F.col(_MARK).desc()).rowsBetween(
+        wf = part.orderBy(F.col(_KEY).desc(), F.col(_MARK).desc(), *tie_f).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         both = unioned.select(
-            *[
-                c
-                for c in unioned.columns
-                if c not in renames.values() and c != _MATCH_KEY
-            ],
+            *carried,
             pick(F.col(_MATCH_KEY)).over(wb).alias("__mk_b"),
             pick(F.col(_MATCH_KEY)).over(wf).alias("__mk_f"),
             *[
@@ -174,14 +194,17 @@ def asof_join(
         )
         return filled.withColumnRenamed(_MATCH_KEY, match_name).drop(_MARK, _KEY)
 
-    key_order = F.col(_KEY).asc() if strategy == "backward" else F.col(_KEY).desc()
+    if strategy == "backward":
+        order = [F.col(_KEY).asc(), F.col(_MARK).desc(), *tie_b]
+    else:
+        order = [F.col(_KEY).desc(), F.col(_MARK).desc(), *tie_f]
     w = (
         Window.partitionBy(*(by_cols or [F.lit(1)]))
-        .orderBy(key_order, F.col(_MARK).desc())
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = unioned.select(
-        *[c for c in unioned.columns if c not in renames.values() and c != _MATCH_KEY],
+        *carried,
         pick(F.col(_MATCH_KEY)).over(w).alias(_MATCH_KEY),
         *[pick(F.col(renames[c])).over(w).alias(renames[c]) for c in value_cols],
     ).where(F.col(_MARK) == 0)

@@ -48,8 +48,8 @@ def _by(df: DataFrame) -> list[str]:
 
 
 def _with_daily_vol(df: DataFrame, trades: DataFrame, span: int, by: list[str]) -> DataFrame:
-    """Append ``daily_return_volatility`` to ``df`` (which carries
-    ``SEQ_COL``): a backward as-of of ``ts - 24h`` against ``trades``,
+    """Append ``daily_return_volatility`` to ``df``: a backward as-of
+    of ``ts - 24h`` against ``trades`` (both carry ``SEQ_COL``),
     then the native EWM std of the lookback returns.
 
     ``trades`` is the base frame, never the growing ``df``: as the
@@ -57,7 +57,9 @@ def _with_daily_vol(df: DataFrame, trades: DataFrame, span: int, by: list[str]) 
     """
     ts, price = column_names.timestamp, column_names.price
     left = df.withColumn("__lookback", F.col(ts) - F.expr("INTERVAL 24 HOURS"))
-    right = trades.select(*by, ts, F.col(price).alias("__lookback_price"))
+    # SEQ_COL orders tied trades: the lookback price is the LAST trade
+    # at-or-before ts - 24h in frame order, as in Polars.
+    right = trades.select(*by, ts, SEQ_COL, F.col(price).alias("__lookback_price"))
     joined = asof_join(
         left,
         right,
@@ -124,9 +126,10 @@ def daily_vol(df: DataFrame, *, span: int = 100) -> DataFrame:
 
     For each row, the lookback price is the last trade at-or-before
     ``ts - 24h`` (backward as-of join, per symbol when a symbol column is
-    present); the return series' exponentially-weighted std (bias
-    corrected, span-parameterized) is the volatility target, computed
-    natively by ``ewm_std(method="native")``.
+    present; among tied trades the last in frame order); the return
+    series' exponentially-weighted std (bias corrected,
+    span-parameterized) is the volatility target, computed natively by
+    ``ewm_std(method="native")``.
 
     Rows without a lookback match (the first 24h per symbol) yield NULL;
     the first matched row yields 0.0 (Polars emits 0.0 for the undefined

@@ -60,9 +60,11 @@ def ewm_std(
     by: Sequence[str] = (),
     order_by: Sequence[str] = (),
     output_col: str = "ewm_std",
-    method: str = "pandas",
+    method: str = "native",
 ) -> DataFrame:
-    """Append bias-corrected exponentially-weighted std of ``value_col``."""
+    """Append bias-corrected exponentially-weighted std of ``value_col``
+    (``method="native"``; ``"pandas"`` is the reference implementation,
+    see the module docstring)."""
     if method == "native":
         return _ewm_std_native(df, value_col, span, by=by, order_by=order_by, output_col=output_col)
     if method != "pandas":

@@ -4,16 +4,19 @@ These helpers read the executed/physical plan so tests can assert the
 properties that matter at 100 TB — how many shuffles a pipeline incurs,
 whether Python stages crept into a native path, whether column pruning
 reached the parquet scan, and that no window uses the O(n²)
-unbounded-following frame (see operators/asof.py).
+unbounded-following frame (see operators/asof.py).  ``codegen_stats``
+reads the session's whole-stage-codegen compilation counters, so a
+caller can see whether repeated passes recompile their plans.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
+    "codegen_stats",
     "plan_string",
     "count_exchanges",
     "count_keyed_exchanges",
@@ -33,6 +36,21 @@ def plan_string(df: DataFrame, mode: str = "physical") -> str:
     if mode == "optimized":
         return qe.optimizedPlan().toString()
     raise ValueError(mode)
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """``(compilations, compile_ms)`` the JVM's code generator has done
+    so far: the count of generated classes Janino compiled and the
+    total time it took.  Both are cumulative over the JVM's life; take
+    the difference around a run.  A steady pass that reuses the
+    session's codegen cache (see ``session.py``) compiles about none.
+
+    Local mode runs the driver and executors in one JVM, so this counts
+    every compilation; on a cluster it counts the driver's only."""
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compilations = metrics.METRIC_COMPILATION_TIME().getCount()
+    return compilations, codegen.CodeGenerator.compileTime() / 1e6
 
 
 def count_exchanges(df: DataFrame) -> int:

@@ -5,6 +5,18 @@ UTC session time (the testdata timestamps are tz-naive), Arrow for the
 pandas-UDF islands, and AQE so skewed symbol partitions re-plan at
 runtime — the knob that matters most at the 100 TB target.
 
+Generated-code cache: Spark keeps compiled whole-stage classes in one
+JVM-wide cache of ``spark.sql.codegen.cache.maxEntries`` entries
+(Spark's default is 100).  One pass of the labeling operators compiles
+339 classes and one pass of the bar operators 126, so with 100 entries
+every class was evicted before the next pass could reuse it: each pass
+paid Janino again and loaded hundreds of fresh classes for HotSpot to
+JIT again, on small inputs the largest CPU cost of a pass.
+``CODEGEN_CACHE_ENTRIES`` holds both families, and a steady pass
+compiles (almost) nothing (``plans.inspect.codegen_stats`` shows it).
+The conf is static: it takes effect only when ``get_spark`` creates the
+context, and the cache is sized once per JVM, on first use.
+
 Engine-specific session confs (settable via ``spark.conf.set`` at any
 time; read per-query, not cached):
 
@@ -23,8 +35,20 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
 
+# Generated classes the JVM keeps compiled.  Measured demand per pass:
+# labeling 339 (daily_vol 52, frac_diff 117, triple barrier 96,
+# sample_weights 74), bars 126 (bar_feature_matrix 54) — about 465 for
+# both families; the rest is slack for the LRU's per-segment eviction.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app_name: str = "polars-trading-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session at its defaults (see the module docstring).
+
+    Static confs — the codegen cache size and the driver memory — only
+    apply when this call creates the context; when a session is already
+    running, ``getOrCreate`` returns it and ignores them.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("PTS_SHUFFLE_PARTITIONS", "32"))
@@ -54,6 +78,7 @@ def get_spark(app_name: str = "polars-trading-spark", *, shuffle_partitions: int
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # InferFiltersFromGenerate turns explode(expr) into a pre-filter
         # that re-expands the exploded expression through every alias —
         # for interpreted HOF pipelines (shingles) that multiplies the

@@ -2,8 +2,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
+from polars_trading_spark._utils import with_seq
 from polars_trading_spark.operators.asof import asof_join
 
 
@@ -70,6 +72,51 @@ def test_different_key_names_keeps_matched_key(spark):
     row = out.collect()[0]
     assert row["tag"] == "m"
     assert row["anchor"] == 3
+
+
+def _tied_pairs(spark, n):
+    """4 symbols x 50 right-side pairs tied on the key (values 1.0 then
+    2.0 in frame order), spread over ``n`` partitions after ``with_seq``
+    numbered them; each interior pair has a probe 1 after it and 1
+    before it, so every probe has a match both ways."""
+    right = with_seq(
+        spark.createDataFrame(
+            [(s, 10 * i, v) for s in "ABCD" for i in range(50) for v in (1.0, 2.0)],
+            "sym string, k long, v double",
+        )
+    ).repartition(n)
+    left = spark.createDataFrame(
+        [(s, 10 * i + d) for s in "ABCD" for i in range(1, 49) for d in (1, -1)],
+        "sym string, k long",
+    ).repartition(n)
+    return left, right
+
+
+@pytest.mark.parametrize(
+    "strategy,after,before",
+    [
+        # backward: the last tied row (Polars); forward: the first;
+        # nearest: the closer of those two candidates
+        ("backward", 2.0, 2.0),
+        ("forward", 1.0, 1.0),
+        ("nearest", 2.0, 1.0),
+    ],
+)
+def test_tied_right_rows_resolve_by_frame_order(spark, strategy, after, before):
+    # Without a tie order the pick depended on partitioning: 1 partition
+    # took the second row, 3 and 8 took the first for about half the
+    # probes.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 3, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            left, right = _tied_pairs(spark, n)
+            out = asof_join(left, right, on="k", by="sym", strategy=strategy)
+            assert sorted(out.columns) == ["k", "k_right", "sym", "v"]
+            got = {(r["k"] % 10, r["v"]) for r in out.collect()}
+            assert got == {(1, after), (9, before)}, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 class TestAsofNearest:

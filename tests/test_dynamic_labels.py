@@ -9,6 +9,7 @@ import datetime as dt
 import pytest
 
 from polars_trading_spark import Config
+from polars_trading_spark._utils import with_seq
 from polars_trading_spark.operators.dynamic_labels import (
     daily_vol,
     get_triple_barrier_label,
@@ -142,23 +143,70 @@ def test_native_ewm_unbounded_length_matches_pandas(spark):
     assert all(v is None or math.isfinite(v) for v in nat.values())
 
 
+TIED_SCHEMA = "ts_event timestamp, price double, size long, symbol string, side double"
+
+
 def _tied_tape():
     """225 trades of one symbol over 150 hourly slots; every even slot
-    holds two trades at the same timestamp.  Tied trades share a price,
-    so the 24h lookback price is the same whichever of them the as-of
-    matches; their volatility targets still differ (successive EWM
-    steps), and their bet sides do."""
+    holds two trades at the same timestamp with distinct prices, so the
+    24h lookback price depends on which tied trade the as-of takes (the
+    last in tape order, as in Polars).  Tied trades' volatility targets
+    differ too (successive EWM steps), and so do their bet sides."""
     import numpy as np
 
     rng = np.random.default_rng(7)
     base = dt.datetime(2024, 1, 1)
     price, rows = 100.0, []
     for slot in range(150):
-        price *= float(np.exp(rng.normal(0.0, 0.01)))
         for _ in range(2 if slot % 2 == 0 else 1):
+            price *= float(np.exp(rng.normal(0.0, 0.01)))
             side = 1.0 if len(rows) % 3 else -1.0
             rows.append((base + dt.timedelta(hours=slot), price, 10, "A", side))
     return rows
+
+
+def _pandas_daily_vol(ts, px, span):
+    """Daily-vol target of one symbol's trades in tape order: the
+    return against the last trade at-or-before ts - 24h, then the
+    bias-corrected EWM std (0.0 for the first return, NaN before)."""
+    import numpy as np
+    import pandas as pd
+
+    lb = np.searchsorted(ts, ts - np.timedelta64(24, "h"), side="right") - 1
+    ret = pd.Series(np.where(lb >= 0, px / px[np.maximum(lb, 0)] - 1, np.nan))
+    valid = ret.notna()
+    trgt = pd.Series(np.nan, index=ret.index)
+    trgt[valid] = ret[valid].ewm(span=span).std().fillna(0.0)
+    return trgt
+
+
+def test_daily_vol_tied_timestamps_match_pandas(spark):
+    # The lookback price of a tied pair is the later trade in tape order
+    # at any partitioning (it depended on partitioning before the as-of
+    # had a tie order).
+    import pandas as pd
+
+    rows = _tied_tape()
+    pdf = pd.DataFrame(rows, columns=["ts", "price", "size", "symbol", "side"])
+    trgt = _pandas_daily_vol(pdf["ts"].to_numpy(), pdf["price"].to_numpy(), 10)
+    want = sorted(
+        (t.to_pydatetime(), None if pd.isna(v) else round(v, 12))
+        for t, v in zip(pdf["ts"], trgt)
+    )
+    base = with_seq(spark.createDataFrame(rows, TIED_SCHEMA))
+    for n in (1, 3, 8):
+        with Config(timestamp_column="ts_event"):
+            out = daily_vol(base.repartition(n), span=10).collect()
+        got = sorted(
+            (
+                r["ts_event"],
+                None
+                if r["daily_return_volatility"] is None
+                else round(r["daily_return_volatility"], 12),
+            )
+            for r in out
+        )
+        assert got == want, n
 
 
 def _afml_triple_barrier(rows, *, span, offset, pt, sl, sided):
@@ -170,11 +218,8 @@ def _afml_triple_barrier(rows, *, span, offset, pt, sl, sided):
 
     pdf = pd.DataFrame(rows, columns=["ts", "price", "size", "symbol", "side"])
     ts, px = pdf["ts"].to_numpy(), pdf["price"].to_numpy()
-    lb = np.searchsorted(ts, ts - np.timedelta64(24, "h"), side="right") - 1
-    ret = pd.Series(np.where(lb >= 0, px / px[np.maximum(lb, 0)] - 1, np.nan))
-    valid = ret.notna()
-    trgt = pd.Series(np.nan, index=pdf.index)
-    trgt[valid] = ret[valid].ewm(span=span).std().fillna(0.0)
+    trgt = _pandas_daily_vol(ts, px, span)
+    valid = trgt.notna()
     vb = np.searchsorted(ts, ts + np.timedelta64(offset), side="left")
     last_ts = ts[valid.to_numpy()].max()
     out = []
@@ -210,9 +255,7 @@ def test_triple_barrier_tied_timestamps_match_afml_loop(spark, label_style):
     # One event row per trade: tied timestamps must not fan an event out
     # to its tied neighbours' targets (189 events from 225 trades).
     rows = _tied_tape()
-    df = spark.createDataFrame(
-        rows, "ts_event timestamp, price double, size long, symbol string, side double"
-    )
+    df = spark.createDataFrame(rows, TIED_SCHEMA)
     sided = label_style == "meta"
     with Config(timestamp_column="ts_event"):
         out = get_triple_barrier_label(
