@@ -42,7 +42,6 @@ __all__ = [
     "truncate",
     "with_seq",
     "ohlcv_aggs",
-    "ensure_parallelism",
     "persist_tracked",
     "release_persisted",
     "declare_unique_timestamps",
@@ -143,29 +142,12 @@ def truncate(ts, duration: str) -> Column:
     return F.timestamp_micros(bucket * F.lit(width) + F.lit(anchor))
 
 
-def ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
-    """Guard against single-split inputs pinning heavy compute to one task.
-
-    A scan of one parquet row group yields one partition, and every
-    narrow transformation downstream inherits that parallelism — fine on
-    a 1000-executor cluster reading thousands of splits, pathological on
-    a single wide node reading one small file.  When the input has fewer
-    partitions than the cluster's default parallelism, repartition (by
-    ``keys`` when given, so joins/aggregates on those keys stay
-    co-partitioned); otherwise no-op, so at scale this costs nothing.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= min(target, 8):
-        return df
-    return df.repartition(target, *keys) if keys else df.repartition(target)
-
-
 # Cache-ownership contract: operators that persist intermediate tables
 # (sketches, event frames) register them here instead of leaking them.
 # At most one operator's caches should be alive at a time in a
-# pipeline-as-library session; callers (bench, the registry wrappers)
-# release the previous operator's caches via ``release_persisted()``.
+# pipeline-as-library session; callers (perfbench, the registry
+# wrappers) release the previous operator's caches via
+# ``release_persisted()``.
 _TRACKED_PERSISTS: list[DataFrame] = []
 
 
@@ -179,8 +161,9 @@ def persist_tracked(df: DataFrame, storage_level=None, *, eager: bool = False) -
     compute does not — so an expensive subtree (tokenize/explode
     chains) multiplies by its consumer count.  At one scan partition
     that race wasted only duplicate work on idle cores; once small
-    scans repartition to every core (the round-14 parallelism guard)
-    the duplicates contend for the same cores and the wall multiplies.
+    payload scans repartition to every core (``_parallelize_small_scan``
+    in sources/tables.py) the duplicates contend for the same cores and
+    the wall multiplies.
     Use eager persists for multi-consumer frames with non-trivial
     lineage; leave single-consumer or serially-consumed frames lazy.
     """

@@ -30,7 +30,7 @@ import contextlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_trading_spark._utils import ensure_parallelism, persist_tracked
+from polars_trading_spark._utils import persist_tracked
 from polars_trading_spark.functions.text import (
     doc_fingerprint,
     portable_hash60,
@@ -124,7 +124,7 @@ def _tokenized(df: DataFrame, text_col: str, id_col: str, extra: tuple[str, ...]
     row *before* the exchange; everything above sees ``__toks`` as a
     plain attribute, so per-element shingle lambdas never re-run the
     tokenizer.  Round 14: the barrier is UNCONDITIONAL — the old
-    ``ensure_parallelism`` guard no-oped whenever the input already had
+    partition-count guard no-oped whenever the input already had
     ≥ 8 partitions (any real-scale scan, or a source repartitioned by
     the round-14 payload-scan guard), CollapseProject then merged the
     token projection into its consumers, and the md5-per-token shingle
@@ -651,7 +651,12 @@ def connected_components(
     edges = pairs.select(F.col(id_a).alias("__src"), F.col(id_b).alias("__dst")).unionByName(
         pairs.select(F.col(id_b).alias("__src"), F.col(id_a).alias("__dst"))
     )
-    edges = persist_tracked(ensure_parallelism(edges, "__dst"))
+    # A one-split pair table would pin every propagation round to one
+    # task: spread it on the join key first (a no-op at scale).
+    target = edges.sparkSession.sparkContext.defaultParallelism
+    if edges.rdd.getNumPartitions() < min(target, 8):
+        edges = edges.repartition(target, "__dst")
+    edges = persist_tracked(edges)
 
     # Init folds the first propagation round into the node-extraction
     # aggregate: label(v) = min(v, min neighbor).  Star-shaped clusters

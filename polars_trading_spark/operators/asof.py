@@ -105,11 +105,8 @@ def asof_join(
         F.lit(0).alias(_MARK),
         *([F.lit(None).cast(right.schema[SEQ_COL].dataType).alias(_TIE)] if tie else []),
     )
-    # Align schemas: left_m carries all left columns; right_m gets nulls for them.
-    for c in left.columns:
-        if c not in right_m.columns:
-            right_m = right_m.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    unioned = left_m.unionByName(right_m.select(*left_m.columns))
+    # left_m carries all left columns; right_m gets nulls for them.
+    unioned = left_m.unionByName(right_m, allowMissingColumns=True)
 
     # Both directions use a RUNNING frame (unbounded-preceding → current)
     # with last(ignorenulls): Spark evaluates running frames incrementally

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from polars_trading_spark._utils import (
     SEQ_COL,
     duration_micros,
-    ensure_parallelism,
     has_unique_timestamps,
 )
 from polars_trading_spark.config import column_names
@@ -68,6 +67,10 @@ def _span_join(
     per-symbol cross product; ``None`` = plain range join.  Shared by
     the sample weights here and the pt/sl first-touch scan
     (``apply_profit_taking_stop_loss``).
+
+    The planner's own exchange hash-partitions both sides on the join
+    keys, so the join spreads across the cluster even when ``path``
+    comes from one split; building the frame runs no job.
     """
     join_keys: list[str] = []
     if bucket is not None:
@@ -84,9 +87,6 @@ def _span_join(
         path = path.withColumn("__bkt", F.floor(F.unix_micros(pt) / bucket_us))
         join_keys.append("__bkt")
     join_keys.extend(by)
-    # The join fans each event out to its path rows — make sure the probe
-    # side is spread across the cluster even when it comes from one split.
-    path = ensure_parallelism(path, *join_keys)
     return events.join(path, on=join_keys, how="inner").where(
         (F.col(pt) >= F.col("__t0")) & (F.col(pt) <= F.col("__t1"))
     )
@@ -114,28 +114,13 @@ def _concurrency_sweep(
     ``ev`` carries (by…, __t0, __t1); ``path`` (by…, __pt, extras).
     Returns ``path`` columns plus integer ``__c`` (0 when uncovered).
     """
-    extras = [c for c in path.columns if c not in (*by, "__pt")]
     starts = ev.select(
-        *by,
-        F.col("__t0").alias("__pt"),
-        F.lit(0).alias("__k"),
-        F.lit(1).alias("__d"),
-        *[F.lit(None).cast(path.schema[c].dataType).alias(c) for c in extras],
+        *by, F.col("__t0").alias("__pt"), F.lit(0).alias("__k"), F.lit(1).alias("__d")
     )
     ends = ev.select(
-        *by,
-        F.col("__t1").alias("__pt"),
-        F.lit(2).alias("__k"),
-        F.lit(-1).alias("__d"),
-        *[F.lit(None).cast(path.schema[c].dataType).alias(c) for c in extras],
+        *by, F.col("__t1").alias("__pt"), F.lit(2).alias("__k"), F.lit(-1).alias("__d")
     )
-    pts = path.select(
-        *by,
-        "__pt",
-        F.lit(1).alias("__k"),
-        F.lit(0).alias("__d"),
-        *extras,
-    )
+    pts = path.select("*", F.lit(1).alias("__k"), F.lit(0).alias("__d"))
     w = (
         Window.partitionBy(*(by or [F.lit(1)]))
         .orderBy("__pt", "__k")
@@ -143,10 +128,22 @@ def _concurrency_sweep(
     )
     return (
         starts.unionByName(ends)
-        .unionByName(pts)
+        .unionByName(pts, allowMissingColumns=True)
         .withColumn("__c", F.sum("__d").over(w))
         .where(F.col("__k") == 1)
         .drop("__k", "__d")
+    )
+
+
+def _event_spans(events: DataFrame, t1_col: str, by: list[str]) -> DataFrame:
+    """(by…, __t0, __t1) per event; a null ``t1_col`` is clamped to the
+    last event timestamp of its group."""
+    ts = column_names.timestamp
+    last_ts = F.max(F.col(ts)).over(Window.partitionBy(*(by or [F.lit(1)])))
+    return events.select(
+        *by,
+        F.col(ts).alias("__t0"),
+        F.coalesce(F.col(t1_col).cast("timestamp"), last_ts).alias("__t1"),
     )
 
 
@@ -161,11 +158,7 @@ def _distinct_path(prices: DataFrame, by: list[str], ts: str) -> DataFrame:
 
 
 def label_concurrency(
-    events: DataFrame,
-    prices: DataFrame,
-    *,
-    t1_col: str = "t1",
-    bucket: str | timedelta | None = "1d",
+    events: DataFrame, prices: DataFrame, *, t1_col: str = "t1"
 ) -> DataFrame:
     """c_t per observed (symbol?, timestamp): the number of event
     intervals [ts, t1] containing it (AFML 4.3.1).
@@ -176,16 +169,9 @@ def label_concurrency(
     """
     ts, symbol = column_names.timestamp, column_names.symbol
     by = [symbol] if symbol in events.columns else []
-
-    last_ts = F.max(F.col(ts)).over(Window.partitionBy(*(by or [F.lit(1)])))
-    ev = events.select(
-        *by,
-        F.col(ts).alias("__t0"),
-        F.coalesce(F.col(t1_col).cast("timestamp"), last_ts).alias("__t1"),
-    )
     path = _distinct_path(prices, by, ts)
     return (
-        _concurrency_sweep(ev, path, by)
+        _concurrency_sweep(_event_spans(events, t1_col, by), path, by)
         .where(F.col("__c") > 0)
         .select(*by, F.col("__pt").alias(ts), F.col("__c").alias("concurrency"))
     )
@@ -222,15 +208,7 @@ def sample_weights(
     """
     ts, price, symbol = column_names.timestamp, column_names.price, column_names.symbol
     by = [symbol] if symbol in events.columns else []
-
-    last_ts = F.max(F.col(ts)).over(
-        Window.partitionBy(*(by or [F.lit(1)]))
-    )
-    ev = events.select(
-        *by,
-        F.col(ts).alias("__t0"),
-        F.coalesce(F.col(t1_col).cast("timestamp"), last_ts).alias("__t1"),
-    )
+    ev = _event_spans(events, t1_col, by)
 
     # Per-timestamp price series → one log return per observed timestamp.
     # Multiple trades on one timestamp resolve to the last by seq (the

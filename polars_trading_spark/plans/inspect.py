@@ -74,11 +74,11 @@ def count_keyed_exchanges(df: DataFrame) -> int:
     explicit ``repartition`` calls carry ``REPARTITION_BY_NUM`` /
     ``REPARTITION_BY_COL``.  In this engine every explicit repartition
     is a parallelism guard or a staging barrier (the payload-scan
-    guard in sources/tables.py, ``ensure_parallelism``, the
-    ``_tokenized`` barrier) — small-input-only or
-    common-subexpression-staging exchanges, not algorithmic data
-    placement — so "zero data-dependent shuffles" contracts assert on
-    this count and bound the total with ``count_exchanges``.  (The
+    guard in sources/tables.py, the edge-table guard in
+    ``connected_components``, the ``_tokenized`` barrier) —
+    small-input-only or common-subexpression-staging exchanges, not
+    algorithmic data placement — so "zero data-dependent shuffles"
+    contracts assert on this count and bound the total with ``count_exchanges``.  (The
     pre-r14 heuristic keyed on RoundRobin vs hash partitioning; the
     payload-scan guard now hash-partitions by the row id to skip
     round-robin's sort-before-repartition of the full payload.)"""

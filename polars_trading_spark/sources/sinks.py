@@ -12,7 +12,7 @@ opinionated layout:
   joins (as-of unions, first-touch scans) co-locate without a shuffle;
 * documents/embeddings land sorted by id with row-group-sized files so
   scans split well (a single giant row group pins work to one task —
-  see ``_utils.ensure_parallelism``).
+  see ``sources/tables.py::_parallelize_small_scan``).
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "polars_trading_spark"
-SCANNED = (PKG, "tests", "scripts", "perfbench", "bench.py", "__spark_entry__.py")
+SCANNED = (PKG, "tests", "scripts", "perfbench", "__spark_entry__.py")
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _INNER_SCOPES = (ast.Lambda, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)

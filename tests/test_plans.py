@@ -192,6 +192,26 @@ def test_triple_barrier_one_pipeline_no_job_at_build(spark, trades):
     assert len(after) == len(before)
     assert count_python_stages(out) == 0
     assert len(re.findall(r"\w+Join\b", plan_string(out))) <= 2
+    assert count_exchanges(out) <= 3
+
+
+def test_sample_weights_no_job_at_build(spark, trades):
+    """The span join leaves the placement of its probe side to the
+    planner's own exchange: building the weights runs no Spark job and
+    adds no repartition on top of the join's shuffle."""
+    from polars_trading_spark.operators.dynamic_labels import (
+        get_vertical_barrier_by_timedelta,
+    )
+    from polars_trading_spark.operators.sample_weights import sample_weights
+
+    tracker = spark.sparkContext.statusTracker()
+    with Config(timestamp_column="ts_event"):
+        events = get_vertical_barrier_by_timedelta(trades, "4h")
+        before = tracker.getJobIdsForGroup(None)
+        out = sample_weights(events, trades, t1_col="vertical_barrier", bucket="4h")
+        after = tracker.getJobIdsForGroup(None)
+    assert len(after) == len(before)
+    assert count_exchanges(out) <= 4
 
 
 def test_vocab_topk_is_distributed_topk_no_python(spark, sf_dir):

@@ -42,7 +42,7 @@ def events(spark):
 def test_label_concurrency_golden(trades, events):
     out = {
         r.timestamp: r.concurrency
-        for r in label_concurrency(events, trades, bucket="1h").collect()
+        for r in label_concurrency(events, trades).collect()
     }
     assert out == {_ts(0): 1, _ts(1): 2, _ts(2): 1}
 
