@@ -412,7 +412,9 @@ def dollar_bars(df: DataFrame, *, bar_size: float = 1_000_000.0, split_by_date: 
             return pd.DataFrame(columns=[f.name for f in schema.fields])
         sym = pdf[symbol].iloc[0]
         prices = pdf[price].to_numpy(dtype=float)
-        sizes = pdf[size].to_numpy(dtype="int64")
+        # A null size weighs 0 shares (as in imbalance's _signed_flow)
+        # and is dropped with the other non-positive sizes below.
+        sizes = pdf[size].fillna(0).to_numpy(dtype="int64")
         stamps = pdf[ts].to_numpy()
 
         keep = sizes > 0

@@ -20,8 +20,6 @@ at sf0.1 for a 3-column output).  No Python anywhere.
 
 from __future__ import annotations
 
-from datetime import timedelta
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,16 +41,15 @@ def average_active_bets(
     t1_col: str = "t1",
     symbol_col: str = "symbol",
     t0_col: str = "ts_event",
-    bucket: str | timedelta | None = "4h",
 ) -> DataFrame:
     """Average bet size over all concurrently-active events (AFML 10.2).
 
     ``events`` needs one row per signal with ``[t0_col, t1_col]`` and a
     ``size_col`` in [-1, 1].  Returns ``symbol, ts_event,
     avg_active_bet, n_active`` — one row per event time, averaging every
-    event whose interval covers it (inclusive on both ends).  ``bucket``
-    is retained for API compatibility; the sweep-line form needs no
-    fan-out bound (it never materializes the covering pairs).
+    event whose interval covers it (inclusive on both ends).  The
+    sweep-line form never materializes the covering pairs, so it needs
+    no fan-out bound.
 
     Sweep detail: boundary rows +m at ``t0`` (kind 0) and -m just after
     ``t1`` (kind 2) bracket each event-time probe row (kind 1), so both

@@ -15,10 +15,11 @@ Scale design: ``get_triple_barrier_label`` builds its events in one
 pass over the trades — ``_with_daily_vol`` and ``_with_vertical_barrier``
 append the volatility target and the barrier (each an as-of against the
 base trades), with no join back on (ts, symbol) and no Spark job while
-the frame is built.  The first-touch scan is then an equi-join on
-(symbol, horizon bucket) with the range condition as a post-filter — the
-bucket explosion bounds fan-out to the barrier horizon instead of a
-per-symbol cross product, so the join stays shuffle-hash/SMJ at 100 TB.
+the frame is built.  The first-touch scan is then an ``interval_join``:
+an equi-join on (symbol, horizon bucket) with the range condition as a
+post-filter — the bucket explosion bounds fan-out to the barrier horizon
+instead of a per-symbol cross product, so the join stays
+shuffle-hash/SMJ at 100 TB.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from polars_trading_spark._utils import SEQ_COL, duration_micros, with_seq
 from polars_trading_spark.config import column_names
 from polars_trading_spark.operators.asof import asof_join
 from polars_trading_spark.operators.ewm import ewm_std
-from polars_trading_spark.operators.sample_weights import _span_join
+from polars_trading_spark.operators.interval import interval_join
 
 __all__ = [
     "daily_vol",
@@ -171,7 +172,7 @@ def apply_profit_taking_stop_loss(
     profit_take: float | None = 1.0,
     stop_loss: float | None = 1.0,
     side_col: str | None = None,
-    bucket: str | timedelta | None = "1d",
+    bucket: str | timedelta = "1d",
 ) -> DataFrame:
     """Earliest path timestamps crossing ±(pt/sl)·target (completes
     reference dynamic_labels.py:148-170; semantics per AFML pg. 45).
@@ -182,15 +183,15 @@ def apply_profit_taking_stop_loss(
     Returns the events plus ``pt_time`` / ``sl_time`` (null = never
     crossed before the barrier).
 
-    ``bucket`` joins on (symbol, floor(epoch / bucket)) with the
+    The scan is an ``interval_join`` of the path against the event
+    windows: it joins on (symbol, floor(epoch / bucket)) with the
     ``[t0, t1]`` range as a filter — each event explodes to the buckets
     its window covers, keeping join fan-out proportional to the barrier
-    horizon (the scale path; a plain range join risks a per-symbol
-    cross product).  Size it to the typical horizon: a bucket much
-    wider than the horizon joins path rows that the range filter
-    discards (with a 4h horizon, "4h" buckets measured ~3× fewer joined
-    rows than "1d"), while much narrower buckets explode gap-spanning
-    events into many pieces.  ``None`` = plain range join.
+    horizon instead of a per-symbol cross product.  Size ``bucket`` to
+    the typical horizon: a bucket much wider than the horizon joins path
+    rows that the range filter discards (with a 4h horizon, "4h" buckets
+    measured ~3× fewer joined rows than "1d"), while much narrower
+    buckets explode gap-spanning events into many pieces.
     """
     ts, price = column_names.timestamp, column_names.price
     by = _by(events)
@@ -215,7 +216,9 @@ def apply_profit_taking_stop_loss(
         t1.alias("__t1"),
     )
     path = prices.select(*by, F.col(ts).alias("__pts"), F.col(price).alias("__pp"))
-    joined = _span_join(ev, path, by, bucket, pt="__pts")
+    joined = interval_join(
+        path, ev, point_on="__pts", start_on="__t0", end_on="__t1", by=by, bucket=bucket
+    )
     ret = (F.col("__pp") / F.col("__entry") - 1) * F.col("__side")
     # Keep this aggregate to cheap min(when(...)) forms only: its input
     # is the event×path fan-out (the big relation in the pipeline), so

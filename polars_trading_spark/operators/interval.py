@@ -2,8 +2,9 @@
 
 Spark compiles a raw ``p.k BETWEEN i.start AND i.end`` join to
 BroadcastNestedLoopJoin — a per-key cross product that dies at scale.
-The scale-safe shape (the same one ``sample_weights`` uses internally
-for its span join) is **bucketed equi-join**:
+The scale-safe shape (the one the pt/sl first-touch scan,
+``dynamic_labels.apply_profit_taking_stop_loss``, runs on) is
+**bucketed equi-join**:
 
 1. explode each interval onto the fixed-width grid cells it covers
    (fan-out bounded by ``interval_length / bucket + 2``);
@@ -23,12 +24,13 @@ primitives (SURVEY.md §2.B) with the standard event-window join.
 
 from __future__ import annotations
 
+from datetime import timedelta
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_trading_spark._utils import parse_duration
+from polars_trading_spark._utils import duration_micros, parse_duration
 
 __all__ = ["interval_join"]
 
@@ -41,24 +43,25 @@ def interval_join(
     start_on: str,
     end_on: str,
     by: str | Sequence[str] | None = None,
-    bucket: str = "15m",
+    bucket: str | timedelta = "15m",
     how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row with
     ``start <= point <= end`` (inclusive both ends), per ``by`` group.
 
-    Keys are timestamps; ``bucket`` is a Polars-style duration setting
-    the grid width.  ``how`` is ``inner`` (matched pairs only) or
-    ``left`` (keep unmatched points with null interval columns).
+    Keys are timestamps; ``bucket`` (a Polars-style duration string or a
+    ``timedelta``) sets the grid width.  ``how`` is ``inner`` (matched
+    pairs only) or ``left`` (keep unmatched points with null interval
+    columns).
     Interval columns colliding with point columns get an ``_iv``
     suffix.  Rows with null keys or ``end < start`` never match.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     by_cols = [by] if isinstance(by, str) else list(by or [])
-    width_us, weekly = parse_duration(bucket)
-    if weekly:
+    if isinstance(bucket, str) and parse_duration(bucket)[1]:
         raise ValueError("weekly buckets are not supported for interval_join")
+    width_us = duration_micros(bucket)
 
     cell = lambda c: F.floor(F.unix_micros(F.col(c)) / F.lit(width_us))  # noqa: E731
 

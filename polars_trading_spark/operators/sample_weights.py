@@ -16,30 +16,24 @@ operators complete that pipeline stage:
 * ``time_decay`` — rescale weights linearly on cumulative uniqueness so
   the oldest sample gets ``last_weight`` and the newest 1.0 (AFML 4.5.4).
 
-Scale design (round 14): concurrency is a SWEEP-LINE — +1/-1 interval
-boundaries unioned with the path timestamps and running-summed per
-symbol — so c_t costs O(2·events + path) rows instead of a window over
-the events×horizon fan-out (the old shape; 8.8s -> 3.6s isolated at
-sf0.1).  The per-event averages still ride ONE bucketed span join (the
-same horizon-bounded equi-join shape as the pt/sl first-touch scan —
-each event explodes to the horizon-sized buckets its interval covers,
-so the join never degenerates to a per-symbol cross product), but the
-fan-out now feeds straight into a map-side-combined hash aggregate:
-nothing shuffles at fan-out grain.  No Python stages anywhere.
+Scale design: ONE sweep-line per symbol.  Each event adds three
+boundary rows to its symbol's distinct path timestamps — +1 at t0, a
+reader just after the t0 path row, -1 just after the t1 path row — and
+running sums ordered by (t, kind) give c_t and the log return at every
+path row, then the prefix sums Σ(1 - 1/c), Σ 1, Σ r/c and the count of
+returns.  Each event reads its span sums as end row minus start row (or
+minus reader row for the strictly-after-t0 attribution), so the whole
+layer costs O(3·events + path) rows, one shuffle into one sorted
+per-symbol window pass, and one aggregate on (symbol, t0) that reuses
+its partitioning: no join, no fan-out, no Python.
 """
 
 from __future__ import annotations
 
-from datetime import timedelta
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_trading_spark._utils import (
-    SEQ_COL,
-    duration_micros,
-    has_unique_timestamps,
-)
+from polars_trading_spark._utils import SEQ_COL, has_unique_timestamps
 from polars_trading_spark.config import column_names
 
 __all__ = [
@@ -50,101 +44,63 @@ __all__ = [
     "time_decay",
 ]
 
-
-def _span_join(
-    events: DataFrame,
-    path: DataFrame,
-    by: list[str],
-    bucket: str | timedelta | None,
-    *,
-    pt: str = "__pt",
-) -> DataFrame:
-    """events × path rows with ``path[pt]`` in [t0, t1], horizon-bucketed.
-
-    ``events`` carries (by…, __t0, __t1); ``path`` carries (by…, ``pt``,
-    extra value columns).  The bucket explode bounds each event's join
-    fan-out to its own horizon, so the join never degenerates to a
-    per-symbol cross product; ``None`` = plain range join.  Shared by
-    the sample weights here and the pt/sl first-touch scan
-    (``apply_profit_taking_stop_loss``).
-
-    The planner's own exchange hash-partitions both sides on the join
-    keys, so the join spreads across the cluster even when ``path``
-    comes from one split; building the frame runs no job.
-    """
-    join_keys: list[str] = []
-    if bucket is not None:
-        bucket_us = duration_micros(bucket)
-        events = events.withColumn(
-            "__bkt",
-            F.explode(
-                F.sequence(
-                    F.floor(F.unix_micros("__t0") / bucket_us),
-                    F.floor(F.unix_micros("__t1") / bucket_us),
-                )
-            ),
-        )
-        path = path.withColumn("__bkt", F.floor(F.unix_micros(pt) / bucket_us))
-        join_keys.append("__bkt")
-    join_keys.extend(by)
-    return events.join(path, on=join_keys, how="inner").where(
-        (F.col(pt) >= F.col("__t0")) & (F.col(pt) <= F.col("__t1"))
-    )
+# Sweep row kinds, in their sort order at one timestamp.
+_START, _PATH, _READ, _END = 0, 1, 2, 3
 
 
-def _concurrency_sweep(
-    ev: DataFrame, path: DataFrame, by: list[str]
-) -> DataFrame:
-    """c_t per path row WITHOUT windowing the span-join fan-out.
-
-    Round 14 (r13 verdict: ``sample_weights`` was the suite's slowest
-    query two rounds running — the old plan shuffled the entire
-    events×span fan-out on (symbol, t) just to count coverage).  The
-    sweep-line form counts it on O(2·events + path) rows instead: +1 at
-    ``__t0``, -1 just after ``__t1``, running-sum ordered by
-    (t, kind) where start boundaries sort BEFORE the path row at the
-    same timestamp and end boundaries AFTER it — so both interval ends
-    stay inclusive.  The count is an exact integer, so downstream
-    aggregates are bit-identical to the fan-out window they replace;
-    the span join now only feeds a map-side-combined hash aggregate.
-    At 100 TB the ordered window shuffles the (small) boundary+path
-    union on the same per-symbol key the return-lag window already
-    uses, instead of the horizon-multiplied fan-out.
-
-    ``ev`` carries (by…, __t0, __t1); ``path`` (by…, __pt, extras).
-    Returns ``path`` columns plus integer ``__c`` (0 when uncovered).
-    """
-    starts = ev.select(
-        *by, F.col("__t0").alias("__pt"), F.lit(0).alias("__k"), F.lit(1).alias("__d")
-    )
-    ends = ev.select(
-        *by, F.col("__t1").alias("__pt"), F.lit(2).alias("__k"), F.lit(-1).alias("__d")
-    )
-    pts = path.select("*", F.lit(1).alias("__k"), F.lit(0).alias("__d"))
-    w = (
+def _sweep_window(by: list[str]) -> Window:
+    return (
         Window.partitionBy(*(by or [F.lit(1)]))
         .orderBy("__pt", "__k")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+
+
+def _sweep(ev: DataFrame, path: DataFrame, by: list[str]) -> DataFrame:
+    """The path rows and three boundary rows per event in one sweep,
+    with the integer concurrency ``__c`` as a running sum.
+
+    ``ev`` carries (by…, __t0, __t1); ``path`` (by…, __pt, extras).
+    Each event emits, ordered by (``__pt``, ``__k``) among the path rows
+    (kind ``_PATH``): +1 at t0 before the t0 path row (``_START``), a
+    reader after it (``_READ``) and -1 after the t1 path row (``_END``),
+    so both interval ends stay inclusive.  Boundary rows carry their
+    event's ``__t0``; on a path row ``__c`` is c_t (0 when uncovered).
+    One explode over ``ev`` emits all three, so the events are read once.
+    """
+
+    def bound(pt: str, kind: int, delta: int):
+        return F.struct(
+            F.col(pt).alias("__pt"), F.lit(kind).alias("__k"), F.lit(delta).alias("__d")
+        )
+
+    bounds = ev.select(
+        *by,
+        "__t0",
+        F.explode(
+            F.array(bound("__t0", _START, 1), bound("__t0", _READ, 0), bound("__t1", _END, -1))
+        ).alias("__b"),
+    ).select(*by, "__t0", "__b.*")
+    pts = path.select("*", F.lit(_PATH).alias("__k"), F.lit(0).alias("__d"))
     return (
-        starts.unionByName(ends)
-        .unionByName(pts, allowMissingColumns=True)
-        .withColumn("__c", F.sum("__d").over(w))
-        .where(F.col("__k") == 1)
-        .drop("__k", "__d")
+        bounds.unionByName(pts, allowMissingColumns=True)
+        .withColumn("__c", F.sum("__d").over(_sweep_window(by)))
+        .drop("__d")
     )
 
 
 def _event_spans(events: DataFrame, t1_col: str, by: list[str]) -> DataFrame:
     """(by…, __t0, __t1) per event; a null ``t1_col`` is clamped to the
-    last event timestamp of its group."""
+    last event timestamp of its group.  An event with a null t0 or with
+    t1 < t0 covers nothing and is dropped (in the sweep its -1 would
+    land before its +1 and undercount its neighbours)."""
     ts = column_names.timestamp
     last_ts = F.max(F.col(ts)).over(Window.partitionBy(*(by or [F.lit(1)])))
     return events.select(
         *by,
         F.col(ts).alias("__t0"),
         F.coalesce(F.col(t1_col).cast("timestamp"), last_ts).alias("__t1"),
-    )
+    ).where(F.col("__t1") >= F.col("__t0"))
 
 
 def _distinct_path(prices: DataFrame, by: list[str], ts: str) -> DataFrame:
@@ -171,110 +127,125 @@ def label_concurrency(
     by = [symbol] if symbol in events.columns else []
     path = _distinct_path(prices, by, ts)
     return (
-        _concurrency_sweep(_event_spans(events, t1_col, by), path, by)
-        .where(F.col("__c") > 0)
+        _sweep(_event_spans(events, t1_col, by), path, by)
+        .where((F.col("__k") == _PATH) & (F.col("__c") > 0))
         .select(*by, F.col("__pt").alias(ts), F.col("__c").alias("concurrency"))
     )
 
 
-def sample_weights(
-    events: DataFrame,
-    prices: DataFrame,
-    *,
-    t1_col: str = "t1",
-    bucket: str | timedelta | None = "1d",
-) -> DataFrame:
+def sample_weights(events: DataFrame, prices: DataFrame, *, t1_col: str = "t1") -> DataFrame:
     """Average uniqueness AND return attribution per event in one pass
     (AFML 4.4.2 + 4.5.3).
 
     ``events`` needs (symbol?, ts, t1); rows with a null ``t1`` are
     clamped to the last event timestamp per symbol (the same fill the
-    pt/sl scan applies).  Output per event:
+    pt/sl scan applies).  Output per event timestamp (events sharing a
+    t0 pool their spans):
 
     * ``avg_uniqueness`` — mean over t ∈ [t0, t1] of 1/c_t, in (0, 1];
       1.0 exactly when the event overlaps nothing.
-    * ``n_path`` — number of observed timestamps in the span.
+    * ``n_path`` — number of observed timestamps in the span; an event
+      whose span holds none yields no row.
     * ``ret_attr`` — |Σ_{t ∈ (t0, t1]} log(p_t/p_{t-1}) / c_t|, the
       overlap-discounted absolute log return; NULL when the span holds
       no return observation (single-tick span).
 
-    One span join serves both: the t0 row participates in uniqueness
-    (intervals are inclusive) while attribution sums strictly-after-t0
-    returns (the return at t0 belongs to the previous holding period).
+    Both read prefix sums off the sweep (``_sweep``): the t0 row counts
+    toward uniqueness (intervals are inclusive) while attribution sums
+    strictly-after-t0 returns (the return at t0 belongs to the previous
+    holding period), so uniqueness differences from the start row and
+    attribution from the reader row.  Uniqueness is taken as
+    1 - ΔΣ(1 - 1/c)/n: the overlap sum adds exact zeros outside
+    overlaps, so it never exceeds 1 and is exactly 1.0 for a lone span.
+    A prefix difference carries an absolute error of about
+    ε × (path rows per symbol): 2e-12 at ten thousand rows.
 
-    The concurrency window shuffles the fan-out once on (symbol, t); the
-    final aggregate returns to (event) grain.  Both keys are bounded by
-    data density × horizon, never by total corpus size.
+    The return, the sweep windows and the final aggregate on (symbol,
+    t0) share one per-symbol shuffle and sort; the layer holds no join.
     """
     ts, price, symbol = column_names.timestamp, column_names.price, column_names.symbol
     by = [symbol] if symbol in events.columns else []
     ev = _event_spans(events, t1_col, by)
 
-    # Per-timestamp price series → one log return per observed timestamp.
-    # Multiple trades on one timestamp resolve to the last by seq (the
-    # deterministic close-side pick used across the bar operators).
+    # One price per observed timestamp: multiple trades on one timestamp
+    # resolve to the last by seq (the deterministic close-side pick used
+    # across the bar operators).
     if has_unique_timestamps(prices, ts):
-        per_ts = prices.select(*by, F.col(ts).alias("__pt"), F.col(price).alias("__p"))
+        path = prices.select(*by, F.col(ts).alias("__pt"), F.col(price).alias("__p"))
     else:
         order = F.struct(F.col(SEQ_COL)) if SEQ_COL in prices.columns else F.col(ts)
-        per_ts = prices.groupBy(*by, F.col(ts).alias("__pt")).agg(
+        path = prices.groupBy(*by, F.col(ts).alias("__pt")).agg(
             F.max_by(F.col(price), order).alias("__p")
         )
-    w_sym = Window.partitionBy(*(by or [F.lit(1)])).orderBy("__pt")
-    path = per_ts.withColumn(
-        "__r", F.log(F.col("__p") / F.lag("__p").over(w_sym))
-    ).drop("__p")
 
-    # Two-phase c_t (round 14): attach the exact integer concurrency to
-    # each path row via the sweep BEFORE the span join, so the fan-out
-    # feeds straight into a map-side-combined hash aggregate instead of
-    # being shuffled whole on (symbol, t) for a window count.
-    path_c = _concurrency_sweep(ev, path, by)
-    with_c = _span_join(ev, path_c, by, bucket)
+    # The log return at a path row reads the previous path row's price
+    # off the sweep order (boundary rows carry none), so the return needs
+    # no window of its own.  Uncovered path rows (c = 0) then belong to
+    # no span; dropping them also keeps 1/c defined under ANSI division.
+    w = _sweep_window(by)
+    prev_p = F.last("__p", ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    on_path = F.col("__k") == _PATH
+    swept = (
+        _sweep(ev, path, by)
+        .withColumn("__r", F.when(on_path, F.log(F.col("__p") / prev_p)))
+        .where(~on_path | (F.col("__c") > 0))
+    )
+    r_c = F.when(on_path, F.col("__r") / F.col("__c"))
+    prefix = swept.select(
+        *by,
+        "__t0",
+        "__k",
+        F.count(F.when(on_path, 1)).over(w).alias("__n"),
+        F.sum(F.when(on_path, 1.0 - 1.0 / F.col("__c")).otherwise(0.0)).over(w).alias("__o"),
+        F.sum(F.coalesce(r_c, F.lit(0.0))).over(w).alias("__ra"),
+        F.count(r_c).over(w).alias("__rn"),
+    ).where(~on_path)
+
+    def span(col: str, since: int):
+        # Sum each side before subtracting: every end prefix of the
+        # overlap sum is >= its start prefix, so the difference cannot
+        # round below zero and avg_uniqueness stays <= 1.
+        k = F.col("__k")
+        return F.sum(F.when(k == _END, F.col(col))) - F.sum(F.when(k == since, F.col(col)))
+
+    n, overlap = F.col("n_path"), F.col("__o")
     return (
-        with_c.groupBy(*by, F.col("__t0").alias(ts))
+        prefix.groupBy(*by, F.col("__t0").alias(ts))
         .agg(
-            F.avg(F.lit(1.0) / F.col("__c")).alias("avg_uniqueness"),
-            F.count(F.lit(1)).alias("n_path"),
-            F.abs(
-                F.sum(
-                    F.when(F.col("__pt") > F.col("__t0"), F.col("__r") / F.col("__c"))
-                )
-            ).alias("ret_attr"),
+            span("__n", _START).alias("n_path"),
+            span("__o", _START).alias("__o"),
+            span("__ra", _READ).alias("__ra"),
+            span("__rn", _READ).alias("__rn"),
+        )
+        .where(n > 0)
+        .select(
+            *by,
+            ts,
+            (F.lit(1.0) - overlap / n).alias("avg_uniqueness"),
+            n,
+            F.when(F.col("__rn") > 0, F.abs(F.col("__ra"))).alias("ret_attr"),
         )
     )
 
 
-def average_uniqueness(
-    events: DataFrame,
-    prices: DataFrame,
-    *,
-    t1_col: str = "t1",
-    bucket: str | timedelta | None = "1d",
-) -> DataFrame:
+def average_uniqueness(events: DataFrame, prices: DataFrame, *, t1_col: str = "t1") -> DataFrame:
     """Per-event average uniqueness only (AFML 4.4.2); see
-    ``sample_weights`` for semantics and the combined fast path."""
+    ``sample_weights`` for semantics."""
     ts = column_names.timestamp
     symbol = column_names.symbol
     by = [symbol] if symbol in events.columns else []
-    return sample_weights(events, prices, t1_col=t1_col, bucket=bucket).select(
+    return sample_weights(events, prices, t1_col=t1_col).select(
         *by, ts, "avg_uniqueness", "n_path"
     )
 
 
-def return_attribution(
-    events: DataFrame,
-    prices: DataFrame,
-    *,
-    t1_col: str = "t1",
-    bucket: str | timedelta | None = "1d",
-) -> DataFrame:
+def return_attribution(events: DataFrame, prices: DataFrame, *, t1_col: str = "t1") -> DataFrame:
     """Per-event return-attribution weight only (AFML 4.5.3); see
     ``sample_weights`` for semantics."""
     ts = column_names.timestamp
     symbol = column_names.symbol
     by = [symbol] if symbol in events.columns else []
-    return sample_weights(events, prices, t1_col=t1_col, bucket=bucket).select(
+    return sample_weights(events, prices, t1_col=t1_col).select(
         *by, ts, "ret_attr", "n_path"
     )
 

@@ -245,9 +245,10 @@ def q_cusum_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # sample_weights — AFML ch.4 extension of the labeling pipeline: label
-# concurrency via one horizon-bucketed span join, average uniqueness,
-# return attribution, linear time decay.  Oracle mirrors the span join +
-# window concurrency + running-sum decay exactly.
+# concurrency, average uniqueness, return attribution, linear time decay.
+# The engine reads span sums off one sweep-line; the oracle computes the
+# same quantities the direct way (span join + window concurrency +
+# running-sum decay).
 # --------------------------------------------------------------------------
 
 
@@ -300,7 +301,7 @@ FROM weights
 """,
     "AFML ch.4 sample weights over 4h-barrier events: average uniqueness "
     "(1/concurrency), return attribution, linear time decay — one "
-    "horizon-bucketed span join, zero Python",
+    "per-symbol sweep, no join, zero Python",
 )
 def q_sample_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polars_trading_spark.operators import sample_weights as sw_ops
@@ -308,9 +309,7 @@ def q_sample_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _trades_config():
         trades = trades_from_events(spark, sf_dir)
         events = dyn_ops.get_vertical_barrier_by_timedelta(trades, BARRIER_OFFSET)
-        out = sw_ops.sample_weights(
-            events, trades, t1_col="vertical_barrier", bucket=BARRIER_OFFSET
-        )
+        out = sw_ops.sample_weights(events, trades, t1_col="vertical_barrier")
         out = sw_ops.time_decay(out, weight_col="avg_uniqueness", last_weight=0.5)
     return out.select(
         "symbol",
@@ -789,7 +788,7 @@ SELECT symbol, pt AS ts_event,
 FROM pairs GROUP BY symbol, pt
 """,
     "Averaging active bets (AFML 10.2) over sigmoid-sized trend-scanning "
-    "signals (AFML 10.3) — horizon-bucketed span join, one aggregate",
+    "signals (AFML 10.3) — one sweep-line window, one aggregate",
 )
 def q_bet_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polars_trading_spark.operators.bet_sizing import (
@@ -807,7 +806,7 @@ def q_bet_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = labels.where(F.col("tval").isNotNull()).withColumn(
             "bet_size", bet_size_from_tstat(F.col("tval"))
         )
-        out = average_active_bets(ev, bucket="4h")
+        out = average_active_bets(ev)
     return out.select(
         "symbol",
         "ts_event",

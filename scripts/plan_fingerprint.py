@@ -1,5 +1,5 @@
-"""Print the physical plan of every bar clock, bar feature and labeling
-operator.
+"""Print the physical plan of every bar clock, bar feature, labeling and
+sample-weight operator.
 
 Each operator is built on the events-derived trades table twice: as
 read (the source declares per-group-unique timestamps) and with that
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from polars_trading_spark._utils import SEQ_COL  # noqa: E402
 from polars_trading_spark.config import Config  # noqa: E402
 from polars_trading_spark.operators import bars, imbalance  # noqa: E402
+from polars_trading_spark.operators.bet_sizing import average_active_bets  # noqa: E402
 from polars_trading_spark.operators.dynamic_labels import (  # noqa: E402
     daily_vol,
     get_triple_barrier_label,
@@ -38,7 +39,10 @@ from polars_trading_spark.operators.dynamic_labels import (  # noqa: E402
 )
 from polars_trading_spark.operators.feature_matrix import bar_feature_matrix  # noqa: E402
 from polars_trading_spark.operators.microstructure import microstructure_features  # noqa: E402
-from polars_trading_spark.operators.sample_weights import sample_weights  # noqa: E402
+from polars_trading_spark.operators.sample_weights import (  # noqa: E402
+    label_concurrency,
+    sample_weights,
+)
 from polars_trading_spark.operators.volatility import bar_volatility  # noqa: E402
 from polars_trading_spark.plans import plan_string  # noqa: E402
 from polars_trading_spark.session import get_spark  # noqa: E402
@@ -57,6 +61,16 @@ def _weights(df):
     return sample_weights(events, df, t1_col="vertical_barrier")
 
 
+def _concurrency(df):
+    events = get_vertical_barrier_by_timedelta(df, "4h")
+    return label_concurrency(events, df, t1_col="vertical_barrier")
+
+
+def _active_bets(df):
+    events = get_vertical_barrier_by_timedelta(df, "4h").withColumn("bet_size", F.lit(0.5))
+    return average_active_bets(events, t1_col="vertical_barrier")
+
+
 OPERATORS = {
     "time_bars": lambda df: bars.time_bars(df, bar_size="15m"),
     "tick_bars": lambda df: bars.tick_bars(df, bar_size=50),
@@ -73,6 +87,8 @@ OPERATORS = {
     "get_triple_barrier_label": lambda df: get_triple_barrier_label(df, span=20, barrier_offset="4h"),
     "get_triple_barrier_label[meta]": _meta,
     "sample_weights": _weights,
+    "label_concurrency": _concurrency,
+    "average_active_bets": _active_bets,
     "bar_volatility": lambda df: bar_volatility(bars.time_bars(df, bar_size="15m")),
     "microstructure_features": lambda df: microstructure_features(bars.time_bars(df, bar_size="15m")),
     "bar_feature_matrix[dollar]": lambda df: bar_feature_matrix(bars.dollar_bars(df, bar_size=1e6)),

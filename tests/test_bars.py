@@ -47,6 +47,26 @@ def test_dollar_bars_overflow_trade_golden(spark, single_trade):
         assert r["n_trades"] == 1
 
 
+def test_dollar_bars_null_size_golden(spark):
+    # A null size weighs 0 shares: the trade drops out exactly like a
+    # zero-size one, and the bars match the tape without it.
+    rows = [
+        ("A", 3.0, 8, dt.datetime(2021, 1, 1, 9, 30, 0)),
+        ("A", 4.0, None, dt.datetime(2021, 1, 1, 9, 30, 1)),
+        ("A", 5.0, 2, dt.datetime(2021, 1, 1, 9, 30, 2)),
+    ]
+    schema = "symbol string, price double, size long, ts_event timestamp"
+    with Config(timestamp_column="ts_event"):
+        got = dollar_bars(spark.createDataFrame(rows, schema), bar_size=13.0).collect()
+        want = dollar_bars(
+            spark.createDataFrame([rows[0], rows[2]], schema), bar_size=13.0
+        ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    # 5 shares at 3 close the first bar (15 >= 13); 3 more at 3 plus 1
+    # at 5 close the second (14); the last share stays open.
+    assert sorted(r["volume"] for r in got) == [1, 4, 5]
+
+
 def test_time_bars_buckets_and_schema(spark):
     df = spark.createDataFrame(
         [
@@ -76,9 +96,9 @@ def test_bars_match_duckdb_oracle(spark, sf_dir, name):
 
 
 def test_dollar_bars_runs_and_conserves_volume(spark, sf_dir):
-    # No SQL oracle (sequential overflow state) — invariants instead:
-    # total shares conserved, every bar >= bar_size dollars except the
-    # last open bar per (symbol, date).
+    # The values are checked against the recursive-CTE DuckDB oracle in
+    # test_registry_oracles; this pins the invariant that every share of
+    # the source lands in exactly one bar.
     q = QUERIES["dollar_bars"]
     out = q.spark(spark, sf_dir).collect()
     assert len(out) > 0

@@ -47,7 +47,7 @@ def _ref_pairs():
     return out
 
 
-@pytest.mark.parametrize("bucket", ["15m", "1m", "4h"])
+@pytest.mark.parametrize("bucket", ["15m", "1m", "4h", dt.timedelta(minutes=7)])
 def test_matches_brute_force_at_any_bucket_width(spark, bucket):
     got = {
         (r["pid"], r["iid"])
@@ -141,6 +141,15 @@ def test_validation_and_no_nested_loop_join(spark):
             start_on="w_start",
             end_on="w_end",
             how="full",
+        )
+    with pytest.raises(ValueError, match="weekly"):
+        interval_join(
+            _points(spark, PTS),
+            _intervals(spark, IVS),
+            point_on="ts",
+            start_on="w_start",
+            end_on="w_end",
+            bucket="1w",
         )
     out = interval_join(
         _points(spark, PTS),

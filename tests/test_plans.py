@@ -168,11 +168,11 @@ def test_sample_weights_zero_python_bounded_exchanges(trades):
     with Config(timestamp_column="ts_event"):
         events = get_vertical_barrier_by_timedelta(trades, "4h")
         out = time_decay(
-            sample_weights(events, trades, t1_col="vertical_barrier", bucket="4h")
+            sample_weights(events, trades, t1_col="vertical_barrier")
         )
     assert count_python_stages(out) == 0
-    # span join + concurrency window + event aggregate + decay windows —
-    # each a keyed shuffle; anything beyond ~8 means a lost partitioning.
+    # The sweep windows, the event aggregate and the decay windows all key
+    # on the symbol; anything beyond ~8 shuffles means a lost partitioning.
     assert count_exchanges(out) <= 8
     assert not has_unbounded_following_frame(out)
 
@@ -196,9 +196,9 @@ def test_triple_barrier_one_pipeline_no_job_at_build(spark, trades):
 
 
 def test_sample_weights_no_job_at_build(spark, trades):
-    """The span join leaves the placement of its probe side to the
-    planner's own exchange: building the weights runs no Spark job and
-    adds no repartition on top of the join's shuffle."""
+    """The weights read their span sums off one per-symbol sweep:
+    building them runs no Spark job, and the plan holds no join and at
+    most the vertical barrier's, the sweep's and the dedup's shuffles."""
     from polars_trading_spark.operators.dynamic_labels import (
         get_vertical_barrier_by_timedelta,
     )
@@ -208,10 +208,11 @@ def test_sample_weights_no_job_at_build(spark, trades):
     with Config(timestamp_column="ts_event"):
         events = get_vertical_barrier_by_timedelta(trades, "4h")
         before = tracker.getJobIdsForGroup(None)
-        out = sample_weights(events, trades, t1_col="vertical_barrier", bucket="4h")
+        out = sample_weights(events, trades, t1_col="vertical_barrier")
         after = tracker.getJobIdsForGroup(None)
     assert len(after) == len(before)
-    assert count_exchanges(out) <= 4
+    assert not re.search(r"\w+Join\b", plan_string(out))
+    assert count_exchanges(out) <= 3
 
 
 def test_vocab_topk_is_distributed_topk_no_python(spark, sf_dir):

@@ -154,7 +154,7 @@ def test_average_active_bets_golden(spark):
         ]
     )
     out = (
-        average_active_bets(spark.createDataFrame(pdf), bucket="1h")
+        average_active_bets(spark.createDataFrame(pdf))
         .toPandas()
         .sort_values(["symbol", "ts_event"])
         .reset_index(drop=True)
